@@ -412,6 +412,8 @@ def main() -> None:
     # fail fast on a short-id collision BEFORE burning the ~100 s run
     shorts = {n.split("_", 1)[0] for n in HEADLINE}
     assert len(shorts) == len(HEADLINE), "short query ids must be unique"
+    # the stdout line keys queries by the id sans its leading 'q'
+    assert all(s.startswith("q") for s in shorts), "query ids must start with 'q'"
     ordered = [n for n in HEADLINE if n in LOCKIN] + [
         n for n in HEADLINE if n not in LOCKIN
     ]
@@ -465,9 +467,11 @@ def main() -> None:
     # old numbers remain available verbatim. The cheapest-row
     # eviction loop stays as a safety net only (queries_omitted
     # reports it; 0 expected).
-    lock_short = {n.split("_", 1)[0][1:] for n in HEADLINE if n in LOCKIN}
+    lock_short = {
+        n.split("_", 1)[0].removeprefix("q") for n in HEADLINE if n in LOCKIN
+    }
     qmap = {
-        n.split("_", 1)[0][1:]: int(round(t * 100))
+        n.split("_", 1)[0].removeprefix("q"): int(round(t * 100))
         for n, t in timings.items()
     }
     assert len(qmap) == len(timings), "short ids must stay unique sans 'q'"

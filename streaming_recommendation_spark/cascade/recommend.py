@@ -1,4 +1,4 @@
-"""The three-stage recommendation cascade as ONE DataFrame plan.
+"""The three-stage recommendation cascade.
 
 Reference dataflow (SURVEY §2.9 M1-M5):
   recall  — user embedding . item matrix, top k_recall
@@ -13,16 +13,26 @@ Reference dataflow (SURVEY §2.9 M1-M5):
   chain   — k: recall 100 -> rank 50 -> rerank 20 -> final 10
             (model_service/models.py:198-210; inference.py:78-106)
 
-Spark-first shape: everything is a DataFrame stage; per-user top-k is
-a rank-filtered window (WindowGroupLimit — per-partition k-heaps);
-the item side is broadcast once and reused by every stage. Scorers
-are pluggable Column-builders: the default stubs are deterministic
-embedding math (dot / cosine — JVM-side, no Python); a torch-backed
-``predict_batch_udf`` drops into the same slots when model weights
-and torch are available (not in this container — import-gated).
+Two plan shapes, one output contract:
 
+  * fused (default scorers, brute recall) — ONE Arrow cogroup pass.
+    Users and their history rows hash into shards; the item matrix
+    replicates per shard; numpy runs mean-pool -> recall -> exclude
+    -> rank -> rerank for every user of the shard and only the
+    k_final survivors leave the task (_fused_brute_cascade). Spark
+    distributes, numpy does the bulk math (guide §4.2/§8.3).
+  * DataFrame plan (custom scorer Columns, "brute_jvm", "lsh") —
+    every stage is a DataFrame stage; per-user top-k is a
+    rank-filtered window (WindowGroupLimit — per-partition k-heaps);
+    the item side is broadcast and reused by every stage. Scorers
+    are pluggable Column-builders; a torch-backed
+    ``predict_batch_udf`` drops into the same slots when model
+    weights and torch are available (not in this container —
+    import-gated).
+
+The default scorers are deterministic embedding math (dot / cosine).
 The reference's model_service stubs DIN/RankNet with ``random``
-scores (models.py:126-130,171-175); our stubs are DETERMINISTIC
+scores (models.py:126-130,171-175); ours are DETERMINISTIC
 (documented divergence, required for testability).
 """
 
@@ -34,6 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, dot
+from ..operators.similarity import mean_pool_grouped
 from ..operators.topk import top_k_per_group
 
 
@@ -67,81 +78,184 @@ def _default_rerank_score() -> Column:
     return cosine_similarity("user_vec", "item_vec")
 
 
-def _vectorized_brute_recall(
-    users: DataFrame, items: DataFrame, k_recall: int
+def _fused_brute_cascade(
+    users: DataFrame, items: DataFrame, history: DataFrame, cfg: CascadeConfig
 ) -> DataFrame:
-    """The brute recall (dot(user_vec, item_vec), top-k_recall per
-    user, ties to the smaller item_id) computed batch-vectorized in
-    numpy instead of per-pair Catalyst HOF folds — guide §4.2/§8.3:
-    Spark distributes, native code does the bulk math. Measured ~6x
-    on the 20M-pair q178 recall stage (the old shape spent ~20 s in
-    interpreted per-pair zip_with+aggregate).
+    """The whole default-scorer cascade in one cogroup pass.
 
-    Bit-parity with the JVM path, element by element: Catalyst's
-    dot() multiplies the raw element type (float32 for the
-    embeddings tables) and folds left into a DOUBLE accumulator
-    (0.0 + p1 + p2 + ...); the numpy loop below multiplies in the
-    SAME dtype and adds each widened product into a float64
-    accumulator in the SAME order, so every score has identical
-    bits and the (score desc, item_id asc) top-k selects identical
-    rows (pinned by tests/test_cascade.py::
-    test_vectorized_recall_matches_jvm).
+    Per user, in numpy: history mean-pool, dot-product recall top
+    k_recall, history exclusion, cosine(item, history) rank cut to
+    min(k_rank, k_rerank) (two cuts on one ordering are one cut), and
+    cosine(user, item) rerank top k_final. Emits (user_id, item_id,
+    rank), rank 1..k_final.
 
-    Scale shape: users hash into `spark.sql.shuffle.partitions`
-    shards (deterministic xxhash64 — guide §2.5 note on rand-derived
-    keys); the item side replicates per shard (explode, no join) —
-    the same "item matrix on every worker" contract the broadcast
-    crossJoin had, with the per-pair score rows never materialized:
-    only the k_recall survivors per user leave the cogroup task. No
-    construction-time jobs — the collect-free plan stays fully lazy.
+    Bit-parity with the DataFrame plan (pinned by tests/
+    test_cascade.py::test_fused_cascade_matches_jvm*):
+      * products in the source dtype (float32 x float32 stays
+        float32, as Catalyst's zip_with does), each widened into a
+        float64 accumulator left to right — dot() and l2_norm()'s
+        0.0 + p1 + p2 + ... fold, float32 squares included;
+      * cosine = dot / (|a| * |b|) when that denominator is > 0,
+        else 0.0;
+      * the history mean is the float64 sum in history order divided
+        by the count (avg's sum / count); a user with no known history
+        items gets a zero history vector;
+      * every top-k breaks ties on score descending, then item_id
+        ascending (items are pre-sorted by item_id and every sort is
+        stable; -0.0 and 0.0 compare equal, as in Spark).
+    History order is the rows' order in ``history`` (partition, then
+    row), carried as a monotonically-increasing id across the shuffle.
+
+    Without a ``user_vec`` column the user vector IS the history mean
+    (the reference's cold-start path, model_service/models.py:64-88)
+    and a user with no known history item gets no recommendations.
+
+    Plan shape: users and history rows (one union) hash into
+    ``spark.sql.shuffle.partitions`` shards by xxhash64(user_id); the
+    item side replicates per shard by explode (no join) — the "item
+    matrix on every worker" contract of a broadcast. Two exchanges,
+    no construction-time jobs, and no per-pair score row ever leaves
+    the task.
     """
     import pandas as pd  # noqa: F401 (applyInPandas contract)
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
     spark = users.sparkSession
     shards = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    has_vec = "user_vec" in users.columns
+    user_type = users.schema["user_id"].dataType
+    item_type = items.schema["item_id"].dataType
     out_schema = StructType(
-        [users.schema["user_id"], items.schema["item_id"]]
+        [
+            users.schema["user_id"],
+            items.schema["item_id"],
+            StructField("rank", IntegerType(), False),
+        ]
     )
+    k_recall, k_final = cfg.k_recall, cfg.k_final
+    k_short = min(cfg.k_rank, cfg.k_rerank)
 
     def score_shard(left, right):
         import numpy as np
         import pandas as pd
 
-        if len(left) == 0 or len(right) == 0:
+        is_hist = left["__hist"].to_numpy(bool)
+        users_df = left[~is_hist].drop_duplicates("user_id")
+        if len(users_df) == 0 or len(right) == 0:
             return pd.DataFrame(
-                {"user_id": left["user_id"][:0], "item_id": right["item_id"][:0]}
+                {
+                    "user_id": left["user_id"][:0],
+                    "item_id": right["item_id"][:0],
+                    "rank": np.zeros(0, np.int32),
+                }
             )
-        U = np.stack(left["user_vec"].to_numpy())
-        V = np.stack(right["item_vec"].to_numpy())
+        hist = left[is_hist].sort_values("__seq", kind="stable")
+        right = right.sort_values("item_id", kind="stable")
+        user_ids = users_df["user_id"].to_numpy()
         item_ids = right["item_id"].to_numpy()
-        # exact replay of Catalyst's fold: per-element product in the
-        # source dtype, widened into a float64 accumulator, left to
-        # right (0.0 + p1 + p2 + ... — IEEE ops in identical order)
-        acc = np.zeros((U.shape[0], V.shape[0]), dtype=np.float64)
-        for i in range(U.shape[1]):
-            acc += U[:, i : i + 1] * V[:, i][None, :]
-        k = min(k_recall, V.shape[0])
-        # row_number over (score desc, item_id asc): lexsort's last
-        # key is primary; -score asc == score desc (equal scores stay
-        # ties — -0.0/+0.0 compare equal — and fall to item_id asc)
-        uid_out = []
-        iid_out = []
-        for r in range(U.shape[0]):
-            order = np.lexsort((item_ids, -acc[r]))[:k]
-            uid_out.append(np.repeat(left["user_id"].iloc[r], k))
-            iid_out.append(item_ids[order])
+        Vt = np.ascontiguousarray(np.stack(right["item_vec"].to_numpy()).T)
+        dim, n_items = Vt.shape
+
+        def fold(a, b):
+            # 0.0 + a[0]*b[0] + a[1]*b[1] + ... over the leading (vector)
+            # axis: each product in the operands' dtype, widened into a
+            # float64 accumulator left to right
+            acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+            for d in range(dim):
+                acc += a[d] * b[d]
+            return acc
+
+        def cosine(num, denom):
+            out = np.zeros_like(num)
+            np.divide(num, denom, out=out, where=denom > 0)
+            return out
+
+        # history mean-pool, in history order
+        hu = pd.Index(user_ids).get_indexer(hist["user_id"])
+        hi = pd.Index(item_ids).get_indexer(hist["item_id"])
+        known = (hu >= 0) & (hi >= 0)
+        hu, hi = hu[known], hi[known]
+        hsum = np.zeros((len(user_ids), dim))
+        np.add.at(hsum, hu, Vt[:, hi].T.astype(np.float64))
+        cnt = np.bincount(hu, minlength=len(user_ids))
+        H = np.zeros_like(hsum)
+        np.divide(hsum, cnt[:, None], out=H, where=cnt[:, None] > 0)
+        if has_vec:
+            U = np.stack(users_df["user_vec"].to_numpy())
+            live = np.arange(len(user_ids))
+        else:
+            U = H
+            live = np.flatnonzero(cnt > 0)
+        Ht, Ut = np.ascontiguousarray(H.T), np.ascontiguousarray(U.T)
+        n_item = np.sqrt(fold(Vt, Vt))
+        n_hist = np.sqrt(fold(Ht, Ht))
+        n_user = np.sqrt(fold(Ut, Ut))
+        seen = np.unique(hu.astype(np.int64) * n_items + hi)
+
+        def top(keys, cand, valid, k):
+            # (valid first, score desc, item_id asc); lexsort's LAST key
+            # is primary and every pass is stable
+            order = np.lexsort((cand, -keys, ~valid), axis=-1)[:, :k]
+            return (
+                np.take_along_axis(cand, order, -1),
+                np.take_along_axis(valid, order, -1),
+            )
+
+        uid_out, iid_out, rank_out = [user_ids[:0]], [item_ids[:0]], [np.zeros(0, np.int32)]
+        k = min(k_recall, n_items)
+        # bound the per-chunk score and candidate-vector arrays
+        step = max(1, (1 << 20) // max(n_items, k * dim))
+        for lo in range(0, len(live), step):
+            r = live[lo : lo + step]
+            # M1 recall: dot(user, item) over every item, top k_recall
+            scores = fold(Ut[:, r, None], Vt[:, None, :])
+            cand = np.argsort(-scores, axis=-1, kind="stable")[:, :k]
+            # J6: history exclusion
+            valid = ~np.isin(r[:, None].astype(np.int64) * n_items + cand, seen)
+            # M3 rank: cosine(item, history mean), cut to min(k_rank, k_rerank)
+            rank_s = cosine(
+                fold(Vt[:, cand], Ht[:, r, None]),
+                n_item[cand] * n_hist[r, None],
+            )
+            cand, valid = top(rank_s, cand, valid, k_short)
+            # M4 rerank: cosine(user, item), top k_final
+            rerank_s = cosine(
+                fold(Ut[:, r, None], Vt[:, cand]),
+                n_user[r, None] * n_item[cand],
+            )
+            cand, valid = top(rerank_s, cand, valid, k_final)
+            rows, cols = np.nonzero(valid)
+            uid_out.append(user_ids[r[rows]])
+            iid_out.append(item_ids[cand[rows, cols]])
+            rank_out.append((cols + 1).astype(np.int32))
         return pd.DataFrame(
             {
                 "user_id": np.concatenate(uid_out),
                 "item_id": np.concatenate(iid_out),
+                "rank": np.concatenate(rank_out),
             }
         )
 
-    u = users.select(
+    # user rows and history rows share one frame (cogroup takes two
+    # sides); placeholders are non-null so Arrow keeps integer ids exact
+    vec, no_vec = [], []
+    if has_vec:
+        vec = [F.col("user_vec")]
+        no_vec = [F.lit(None).cast(users.schema["user_vec"].dataType).alias("user_vec")]
+    left = users.select(
         "user_id",
-        "user_vec",
-        F.pmod(F.xxhash64("user_id"), F.lit(shards)).alias("__shard"),
+        *vec,
+        F.lit(0).cast(item_type).alias("item_id"),
+        F.lit(0).cast("long").alias("__seq"),
+        F.lit(False).alias("__hist"),
+    ).unionByName(
+        history.where(F.col("item_id").isNotNull()).select(
+            F.col("user_id").cast(user_type).alias("user_id"),
+            *no_vec,
+            F.col("item_id").cast(item_type).alias("item_id"),
+            F.monotonically_increasing_id().alias("__seq"),
+            F.lit(True).alias("__hist"),
+        )
     )
     it = items.select(
         "item_id",
@@ -151,7 +265,8 @@ def _vectorized_brute_recall(
         ).alias("__shard"),
     )
     return (
-        u.groupBy("__shard")
+        left.withColumn("__shard", F.pmod(F.xxhash64("user_id"), F.lit(shards)))
+        .groupBy("__shard")
         .cogroup(it.groupBy("__shard"))
         .applyInPandas(score_shard, schema=out_schema)
     )
@@ -169,27 +284,44 @@ def recommend(
 ) -> DataFrame:
     """Run the cascade for every user in `users`.
 
-    users:   (user_id, user_vec: array<double-ish>)
-    items:   (item_id, item_vec)
+    users:   (user_id[, user_vec: array<float|double>]), one row per
+             user. Without ``user_vec`` the user vector is the mean of
+             the user's known history item vectors (the reference's
+             cold-start path); users with no known history item then
+             get no recommendations.
+    items:   (item_id, item_vec), one row per item
     history: (user_id, item_id) — already-seen pairs to exclude (J6)
+             and the rows the history mean-pool averages
 
     Returns (user_id, item_id, rank) with rank 1..k_final.
 
-    Plan shape: items broadcast to every stage; the candidate set
+    With the three default scorers and ``recall_strategy="brute"`` the
+    whole cascade runs as one Arrow cogroup pass
+    (``_fused_brute_cascade``, bit-identical to the DataFrame plan).
+    A custom scorer Column, ``"brute_jvm"`` or ``"lsh"`` runs the
+    DataFrame plan: items broadcast to every stage; the candidate set
     shrinks 100 -> 50 -> 20 -> 10 per user, so later stages are
-    narrow. One shuffle per top-k window, all on user_id — Spark
-    reuses the partitioning across consecutive windows.
+    narrow; one shuffle per top-k window, all on user_id.
     """
     cfg = config or CascadeConfig()
+    scorers = (recall_score, rank_score, rerank_score)
+    if recall_strategy == "brute" and all(s is None for s in scorers):
+        return _fused_brute_cascade(users, items, history, cfg)
+
+    # History mean-pool for the rank stub (A7): mean of history item
+    # vectors per user; users with no history get a zero vector.
+    hist_vecs = mean_pool_grouped(
+        history.join(F.broadcast(items), "item_id"), "user_id", "item_vec"
+    ).withColumnRenamed("mean_vec", "history_vec")
+    if "user_vec" not in users.columns:
+        users = hist_vecs.join(users.select("user_id"), "user_id", "left_semi").select(
+            "user_id", F.col("history_vec").alias("user_vec")
+        )
 
     # M1 recall. recall_strategy:
-    #   "brute" — score every (user, item) pair (exact). With the
-    #             default dot scorer this runs the numpy-vectorized
-    #             cogroup (_vectorized_brute_recall — bit-identical,
-    #             guide §4.2); a CUSTOM recall_score Column keeps the
-    #             crossJoin+window shape (the Column must evaluate
-    #             in-plan).
-    #   "brute_jvm" — force the crossJoin+window reference shape.
+    #   "brute" — score every (user, item) pair (exact); a custom
+    #             recall_score Column runs in-plan over the crossJoin.
+    #   "brute_jvm" — the crossJoin+window reference shape.
     #   "lsh"   — SRP-LSH bucketed approximate recall: at 100 TB the
     #             item corpus is too large to score densely; buckets
     #             prune ~1/2^P per table (same output contract)
@@ -205,8 +337,6 @@ def recommend(
             vec_col="item_vec",
             query_id_col="user_id",
         ).select("user_id", F.col("neighbor_id").alias("item_id"))
-    elif recall_score is None and recall_strategy == "brute":
-        recalled = _vectorized_brute_recall(users, items, cfg.k_recall)
     else:
         scored = users.crossJoin(F.broadcast(items)).select(
             "user_id",
@@ -225,21 +355,6 @@ def recommend(
 
     # J6: drop items the user has already interacted with.
     fresh = recalled.join(history, ["user_id", "item_id"], "left_anti")
-
-    # History mean-pool for the rank stub (A7): mean of history item
-    # vectors per user; users with no history get a zero vector.
-    hist_vecs = (
-        history.join(F.broadcast(items), "item_id")
-        .select("user_id", F.posexplode("item_vec").alias("dim", "v"))
-        .groupBy("user_id", "dim")
-        .agg(F.avg("v").alias("v"))
-        .groupBy("user_id")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim", "v"))), lambda s: s["v"]
-            ).alias("history_vec")
-        )
-    )
 
     # M3 rank: candidate vs history context, keep k_rank.
     with_feats = (

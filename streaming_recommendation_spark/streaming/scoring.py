@@ -5,7 +5,7 @@ The reference triggers inference by POLLING Redis every second with
 full keyspace scan per tick, disconnected from ingestion. Here the
 scoring stage consumes the SAME micro-batch that wrote the profile:
 ``foreachBatch`` receives the parsed profiles, runs the cascade
-DataFrame plan against the item embeddings, and writes
+plan against the item embeddings, and writes
 ``recommendation_result:{user_id}:{timestamp}`` keys (the reference's
 result-key format, api_service/main.py:85) through the executor-side
 sink. No polling, no second system, and the cascade plan is the
@@ -30,42 +30,36 @@ def score_batch(
     """Profiles (user_id, history_items, timestamp) -> versioned
     recommendation records (key, value).
 
-    The user vector is the mean of the profile's history-item vectors
-    (the reference's cold-start path, model_service/models.py:64-88) —
-    fully deterministic, no model weights needed; learned scorers plug
-    into the same ``recommend`` call.
-
     The cascade is keyed by the (user_id, timestamp) PROFILE VERSION,
     not the bare user: two versions of the same user in one
     micro-batch each get recommendations from exactly their own
-    history, written under their own versioned key (previously both
-    keys received a blend of the merged histories). The composite key
+    history, written under their own versioned key. The composite key
     doubles as the result-key suffix, so no join-back is needed to
     recover the timestamp.
+
+    ``recommend`` gets the versions WITHOUT a user vector plus their
+    history rows in profile order, so the user vector is the mean of
+    the profile's known history-item vectors (the reference's
+    cold-start path, model_service/models.py:64-88) — fully
+    deterministic, no model weights needed. A history entry is known
+    when it is the string form of an item_id; unknown entries drop,
+    and a profile with no known entry gets no key.
+
+    Plan shape: the default scorers run the fused cascade, so a
+    micro-batch is one cogroup (two exchanges: profiles, replicated
+    items), one exchange to gather each version's list, and the write
+    — about four Spark jobs per batch.
     """
-    exploded = profiles.select(
-        F.concat_ws(
-            ":", F.col("user_id"), F.col("timestamp").cast("string")
-        ).alias("__version"),
-        F.explode("history_items").alias("item_key"),
+    version = F.concat_ws(":", F.col("user_id"), F.col("timestamp").cast("string"))
+    key = F.col("item_key")
+    item_id = key.try_cast(items.schema["item_id"].dataType)
+    history = (
+        profiles.select(version.alias("user_id"), F.explode("history_items").alias("item_key"))
+        # the item_id whose string form is this key, if any
+        .where(item_id.cast("string") == key)
+        .select("user_id", item_id.alias("item_id"))
     )
-    with_vecs = exploded.join(
-        F.broadcast(items.withColumn("item_key", F.col("item_id").cast("string"))),
-        "item_key",
-    )
-    user_vecs = (
-        with_vecs.select("__version", F.posexplode("item_vec").alias("dim", "v"))
-        .groupBy("__version", "dim")
-        .agg(F.avg("v").alias("v"))
-        .groupBy("__version")
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim", "v"))), lambda s: s["v"]
-            ).alias("user_vec")
-        )
-    )
-    history = with_vecs.select(F.col("__version").alias("user_id"), "item_id")
-    users = user_vecs.select(F.col("__version").alias("user_id"), "user_vec")
+    users = profiles.select(version.alias("user_id"))
     recs = recommend(users, items, history, config or CascadeConfig())
     per_version = recs.groupBy("user_id").agg(
         F.transform(

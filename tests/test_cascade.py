@@ -235,33 +235,33 @@ def test_category_capped_topk_greedy_equivalence(spark):
     assert got == [(1, 10, 0, 1), (2, 11, 0, 2), (3, 13, 1, 4), (4, 15, 2, 6)]
 
 
+def _rows(df):
+    return sorted(map(tuple, df.select("user_id", "item_id", "rank").collect()))
+
+
 def test_vectorized_recall_matches_jvm(cascade_inputs):
-    """Round-12 optimization pin: the numpy-vectorized brute recall
-    (cogroup + exact left-fold scoring, the default when no custom
-    recall_score is given) is bit-identical to the crossJoin+window
-    JVM reference at every cascade stage — same floats, same
-    (score desc, item_id asc) tie-breaks, same final lists."""
+    """The numpy cascade kernel (the default when no scorer Column is
+    given) is bit-identical to the crossJoin+window JVM reference —
+    same floats, same (score desc, item_id asc) tie-breaks, same final
+    lists — and its recall stage selects the exact same (user, item)
+    candidate set: with no history and every later cut wider than
+    k_recall, the output IS the recall set."""
     from streaming_recommendation_spark.cascade.recommend import (
-        _vectorized_brute_recall,
+        _default_recall_score,
+        _fused_brute_cascade,
     )
+    from streaming_recommendation_spark.operators.topk import top_k_per_group
 
     users, items, history = cascade_inputs
     cfg = CascadeConfig(k_recall=50, k_rank=25, k_rerank=12, k_final=5)
     vec = recommend(users, items, history, cfg, recall_strategy="brute")
     jvm = recommend(users, items, history, cfg, recall_strategy="brute_jvm")
-    assert sorted(map(tuple, vec.collect())) == sorted(map(tuple, jvm.collect()))
-    # the recall stage itself (before downstream cuts) selects the
-    # exact same (user, item) candidate set
-    got = sorted(
-        map(tuple, _vectorized_brute_recall(users, items, 37).collect())
-    )
-    from pyspark.sql import functions as SF
-    from streaming_recommendation_spark.cascade.recommend import (
-        _default_recall_score,
-    )
-    from streaming_recommendation_spark.operators.topk import top_k_per_group
+    assert _rows(vec) == _rows(jvm)
 
-    scored = users.crossJoin(SF.broadcast(items)).select(
+    wide = CascadeConfig(k_recall=37, k_rank=500, k_rerank=500, k_final=500)
+    got = _fused_brute_cascade(users, items, history.where(F.lit(False)), wide)
+    got = sorted(map(tuple, got.select("user_id", "item_id").collect()))
+    scored = users.crossJoin(F.broadcast(items)).select(
         "user_id", "item_id", _default_recall_score().alias("recall_score")
     )
     ref = sorted(
@@ -271,11 +271,78 @@ def test_vectorized_recall_matches_jvm(cascade_inputs):
                 scored,
                 37,
                 ["user_id"],
-                SF.col("recall_score").desc(),
-                SF.col("item_id").asc(),
+                F.col("recall_score").desc(),
+                F.col("item_id").asc(),
             )
             .select("user_id", "item_id")
             .collect(),
         )
     )
+    assert len(got) == 10 * 37
     assert got == ref
+
+
+@pytest.fixture(scope="module")
+def edge_history(spark, cascade_inputs):
+    """cascade_inputs' history with two edge users: user 0 has only an
+    unknown item (no known history -> zero history vector, or no
+    recommendations without a user_vec) and user 1 has duplicate
+    history items (each occurrence counts in the mean)."""
+    _users, _items, history = cascade_inputs
+    extra = spark.createDataFrame(
+        [(0, 10_000), (1, 3), (1, 3), (1, 7), (1, 3)],
+        "user_id bigint, item_id bigint",
+    )
+    return history.where(F.col("user_id") > 1).unionByName(extra).coalesce(1)
+
+
+@pytest.fixture(scope="module")
+def tied_items(cascade_inputs):
+    """The items plus copies of items 0..59 under ids 1000..1059,
+    listed first: every copy ties its original at every stage, so the
+    (score desc, item_id asc) tie-break decides which one survives."""
+    _users, items, _history = cascade_inputs
+    copies = items.where(F.col("item_id") < 60).select(
+        (F.col("item_id") + 1000).alias("item_id"), "item_vec"
+    )
+    return copies.unionByName(items)
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        CascadeConfig(),
+        CascadeConfig(k_recall=40, k_rank=8, k_rerank=15, k_final=5),
+        CascadeConfig(k_recall=700, k_rank=300, k_rerank=40, k_final=12),
+    ],
+    ids=["default_k", "k_rank_lt_k_rerank", "k_recall_ge_items"],
+)
+def test_fused_cascade_matches_jvm(cascade_inputs, edge_history, tied_items, cfg):
+    """Fused kernel vs recall_strategy="brute_jvm": identical
+    (user_id, item_id, rank) rows, including a user with no known
+    history item, a user with duplicate history items, and items whose
+    scores tie exactly."""
+    users, _items, _history = cascade_inputs
+    items = tied_items
+    fused = _rows(recommend(users, items, edge_history, cfg))
+    jvm = _rows(recommend(users, items, edge_history, cfg, recall_strategy="brute_jvm"))
+    assert fused == jvm
+    assert {r[0] for r in fused} == set(range(10))
+    assert all(r[2] <= cfg.k_final for r in fused)
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [CascadeConfig(), CascadeConfig(k_recall=40, k_rank=8, k_rerank=15, k_final=5)],
+    ids=["default_k", "k_rank_lt_k_rerank"],
+)
+def test_fused_cascade_matches_jvm_without_user_vec(cascade_inputs, edge_history, cfg):
+    """A users frame without user_vec: the user vector is the history
+    mean-pool on both paths, and user 0 (no known history item) gets
+    no recommendations."""
+    users, items, _history = cascade_inputs
+    ids = users.select("user_id")
+    fused = _rows(recommend(ids, items, edge_history, cfg))
+    jvm = _rows(recommend(ids, items, edge_history, cfg, recall_strategy="brute_jvm"))
+    assert fused == jvm
+    assert {r[0] for r in fused} == set(range(1, 10))

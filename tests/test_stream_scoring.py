@@ -195,6 +195,94 @@ def test_score_batch_keeps_profile_versions_separate(spark, items):
     assert v1 != v2
 
 
+def _jvm_reference(profiles, items, cfg):
+    """score_batch's result through the DataFrame plan: history keys
+    matched to items as strings, user vector = history mean-pool
+    (users without user_vec), recall_strategy="brute_jvm"."""
+    from streaming_recommendation_spark.cascade import recommend
+
+    history = profiles.select(
+        F.concat_ws(":", F.col("user_id"), F.col("timestamp").cast("string")).alias(
+            "user_id"
+        ),
+        F.explode("history_items").alias("item_key"),
+    ).join(
+        F.broadcast(
+            items.select(F.col("item_id").cast("string").alias("item_key"), "item_id")
+        ),
+        "item_key",
+    ).select("user_id", "item_id")
+    recs = recommend(
+        history.select("user_id").distinct(),
+        items,
+        history,
+        cfg,
+        recall_strategy="brute_jvm",
+    ).collect()
+    out = {}
+    for r in sorted(recs, key=lambda r: (r.user_id, r["rank"])):
+        out.setdefault(f"recommendation_result:{r.user_id}", []).append(str(r.item_id))
+    return out
+
+
+def test_score_batch_matches_jvm_reference(spark, items):
+    """score_batch (fused cascade, user vector = history mean) writes
+    exactly what the JVM-path reference computes: two versions of one
+    user, unknown and non-canonical item ids ("999999", "abc", "07")
+    next to a duplicate, and an all-unknown profile that gets no key."""
+    from streaming_recommendation_spark.cascade import CascadeConfig
+
+    profiles = spark.createDataFrame(
+        [
+            {"user_id": "300", "history_items": ["1", "2"], "timestamp": 1_700_000_100},
+            {"user_id": "300", "history_items": ["50", "51", "52"], "timestamp": 1_700_000_200},
+            {
+                "user_id": "400",
+                "history_items": ["5", "999999", "abc", "07", "6", "5"],
+                "timestamp": 1_700_000_300,
+            },
+            {"user_id": "500", "history_items": ["abc", "999999"], "timestamp": 1_700_000_400},
+        ]
+    )
+    for cfg in (CascadeConfig(), CascadeConfig(k_recall=30, k_rank=6, k_rerank=9, k_final=4)):
+        got = {r.key: json.loads(r.value) for r in score_batch(profiles, items, cfg).collect()}
+        assert got == _jvm_reference(profiles, items, cfg)
+        assert set(got) == {
+            "recommendation_result:300:1700000100",
+            "recommendation_result:300:1700000200",
+            "recommendation_result:400:1700000300",
+        }
+        assert not {"5", "6", "7"} & set(got["recommendation_result:400:1700000300"])
+
+
+def test_score_batch_job_count(spark, items, tmp_path):
+    """One micro-batch of the streaming leg (score_batch +
+    foreach_batch_writer) runs as a handful of Spark jobs: the fused
+    cascade's cogroup, the per-version gather and the write — not one
+    job per cascade stage (the DataFrame plan took ~20)."""
+    from streaming_recommendation_spark.streaming.pipeline import parse_profile_stream
+    from streaming_recommendation_spark.streaming.sink import foreach_batch_writer
+
+    msgs = tmp_path / "batch.json"
+    msgs.write_text("\n".join(json.dumps(m) for m in profile_messages()) + "\n")
+    batch = parse_profile_stream(spark.read.text(str(msgs)))
+    items.count()  # the cached item side is set-up, not part of a batch
+    sink = JsonlDirSink(str(tmp_path / "kv"))
+    sc = spark.sparkContext
+    group = "test_score_batch_job_count"
+    sc.setJobGroup(group, "one scoring micro-batch")
+    try:
+        foreach_batch_writer(sink)(score_batch(batch, items), 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 6, jobs
+    assert set(sink.read_all()) == {
+        "recommendation_result:100:1700000100",
+        "recommendation_result:200:1700000200",
+    }
+
+
 def test_ewma_state_matches_batch_across_microbatches(spark, tmp_path):
     """Streaming EWMA with keyed state must be bit-equal to the batch
     operator regardless of how events split into micro-batches
