@@ -15,12 +15,16 @@ Reference dataflow (SURVEY §2.9 M1-M5):
 
 Two plan shapes, one output contract:
 
-  * fused (default scorers, brute recall) — ONE Arrow cogroup pass.
-    Users and their history rows hash into shards; the item matrix
-    replicates per shard; numpy runs mean-pool -> recall -> exclude
-    -> rank -> rerank for every user of the shard and only the
-    k_final survivors leave the task (_fused_brute_cascade). Spark
-    distributes, numpy does the bulk math (guide §4.2/§8.3).
+  * fused (default scorers, brute recall) — ONE numpy kernel
+    (cascade_kernel: mean-pool -> recall -> exclude -> rank ->
+    rerank for a block of users; only the k_final survivors leave
+    the task) with two feeders. ``recommend``'s is an Arrow cogroup
+    (_fused_brute_cascade): users and their history rows, a separate
+    frame, hash into shards and the item matrix replicates per shard.
+    streaming.scoring.score_batch's is a narrow per-partition pass:
+    each profile row carries its own history, so nothing shuffles
+    and the item side ships from the driver. Spark distributes,
+    numpy does the bulk math (guide §4.2/§8.3).
   * DataFrame plan (custom scorer Columns, "brute_jvm", "lsh") —
     every stage is a DataFrame stage; per-user top-k is a
     rank-filtered window (WindowGroupLimit — per-partition k-heaps);
@@ -78,16 +82,54 @@ def _default_rerank_score() -> Column:
     return cosine_similarity("user_vec", "item_vec")
 
 
-def _fused_brute_cascade(
-    users: DataFrame, items: DataFrame, history: DataFrame, cfg: CascadeConfig
-) -> DataFrame:
-    """The whole default-scorer cascade in one cogroup pass.
+def _fold(a, b):
+    """0.0 + a[0]*b[0] + a[1]*b[1] + ... over the leading (vector)
+    axis: each product in the operands' dtype, widened into a float64
+    accumulator left to right."""
+    import numpy as np
 
-    Per user, in numpy: history mean-pool, dot-product recall top
-    k_recall, history exclusion, cosine(item, history) rank cut to
+    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    for d in range(a.shape[0]):
+        acc += a[d] * b[d]
+    return acc
+
+
+def item_side(items):
+    """The cascade kernel's item operand from a pandas frame of
+    (item_id, item_vec): ids sorted ascending (stable), the matrix
+    transposed to (dim, n_items) in the source dtype, and each item's
+    L2 norm."""
+    import numpy as np
+
+    items = items.sort_values("item_id", kind="stable")
+    item_ids = items["item_id"].to_numpy()
+    if len(items) == 0:
+        return item_ids, np.zeros((0, 0)), np.zeros(0)
+    Vt = np.ascontiguousarray(np.stack(items["item_vec"].to_numpy()).T)
+    return item_ids, Vt, np.sqrt(_fold(Vt, Vt))
+
+
+def cascade_kernel(user_ids, user_vecs, hist_users, hist_items, items, cfg):
+    """The whole default-scorer cascade for a block of users, in numpy.
+
+    Per user: history mean-pool, dot-product recall top k_recall,
+    history exclusion, cosine(item, history) rank cut to
     min(k_rank, k_rerank) (two cuts on one ordering are one cut), and
-    cosine(user, item) rerank top k_final. Emits (user_id, item_id,
-    rank), rank 1..k_final.
+    cosine(user, item) rerank top k_final.
+
+    user_ids:   the distinct users of the block
+    user_vecs:  their vectors, or None: the user vector IS the history
+                mean (the reference's cold-start path, model_service/
+                models.py:64-88) and a user with no known history item
+                gets no recommendations
+    hist_users: each history entry's position in ``user_ids`` (-1:
+                not a user of the block), in history order
+    hist_items: each history entry's item_id; ids not in ``items`` drop
+    items:      ``item_side(...)``
+
+    Returns (user position, item_id, rank) arrays, rank 1..k_final,
+    grouped by user in ascending position and in rank order within a
+    user.
 
     Bit-parity with the DataFrame plan (pinned by tests/
     test_cascade.py::test_fused_cascade_matches_jvm*):
@@ -103,12 +145,89 @@ def _fused_brute_cascade(
       * every top-k breaks ties on score descending, then item_id
         ascending (items are pre-sorted by item_id and every sort is
         stable; -0.0 and 0.0 compare equal, as in Spark).
+    """
+    import numpy as np
+    import pandas as pd
+
+    item_ids, Vt, n_item = items
+    dim, n_items = Vt.shape
+    empty = (np.zeros(0, np.int64), item_ids[:0], np.zeros(0, np.int32))
+    if len(user_ids) == 0 or n_items == 0:
+        return empty
+    k_recall, k_final = cfg.k_recall, cfg.k_final
+    k_short = min(cfg.k_rank, cfg.k_rerank)
+
+    def cosine(num, denom):
+        out = np.zeros_like(num)
+        np.divide(num, denom, out=out, where=denom > 0)
+        return out
+
+    # history mean-pool, in history order
+    hu = hist_users
+    hi = pd.Index(item_ids).get_indexer(hist_items)
+    known = (hu >= 0) & (hi >= 0)
+    hu, hi = hu[known], hi[known]
+    hsum = np.zeros((len(user_ids), dim))
+    np.add.at(hsum, hu, Vt[:, hi].T.astype(np.float64))
+    cnt = np.bincount(hu, minlength=len(user_ids))
+    H = np.zeros_like(hsum)
+    np.divide(hsum, cnt[:, None], out=H, where=cnt[:, None] > 0)
+    if user_vecs is not None:
+        U = user_vecs
+        live = np.arange(len(user_ids))
+    else:
+        U = H
+        live = np.flatnonzero(cnt > 0)
+    Ht, Ut = np.ascontiguousarray(H.T), np.ascontiguousarray(U.T)
+    n_hist = np.sqrt(_fold(Ht, Ht))
+    n_user = np.sqrt(_fold(Ut, Ut))
+    seen = np.unique(hu.astype(np.int64) * n_items + hi)
+
+    def top(keys, cand, valid, k):
+        # (valid first, score desc, item_id asc); lexsort's LAST key
+        # is primary and every pass is stable
+        order = np.lexsort((cand, -keys, ~valid), axis=-1)[:, :k]
+        return (
+            np.take_along_axis(cand, order, -1),
+            np.take_along_axis(valid, order, -1),
+        )
+
+    out = [empty]
+    k = min(k_recall, n_items)
+    # bound the per-chunk score and candidate-vector arrays
+    step = max(1, (1 << 20) // max(n_items, k * dim))
+    for lo in range(0, len(live), step):
+        r = live[lo : lo + step]
+        # M1 recall: dot(user, item) over every item, top k_recall
+        scores = _fold(Ut[:, r, None], Vt[:, None, :])
+        cand = np.argsort(-scores, axis=-1, kind="stable")[:, :k]
+        # J6: history exclusion
+        valid = ~np.isin(r[:, None].astype(np.int64) * n_items + cand, seen)
+        # M3 rank: cosine(item, history mean), cut to min(k_rank, k_rerank)
+        rank_s = cosine(
+            _fold(Vt[:, cand], Ht[:, r, None]),
+            n_item[cand] * n_hist[r, None],
+        )
+        cand, valid = top(rank_s, cand, valid, k_short)
+        # M4 rerank: cosine(user, item), top k_final
+        rerank_s = cosine(
+            _fold(Ut[:, r, None], Vt[:, cand]),
+            n_user[r, None] * n_item[cand],
+        )
+        cand, valid = top(rerank_s, cand, valid, k_final)
+        rows, cols = np.nonzero(valid)
+        out.append((r[rows], item_ids[cand[rows, cols]], (cols + 1).astype(np.int32)))
+    return tuple(np.concatenate(parts) for parts in zip(*out))
+
+
+def _fused_brute_cascade(
+    users: DataFrame, items: DataFrame, history: DataFrame, cfg: CascadeConfig
+) -> DataFrame:
+    """The whole default-scorer cascade (``cascade_kernel``) in one
+    cogroup pass. Emits (user_id, item_id, rank), rank 1..k_final.
+
     History order is the rows' order in ``history`` (partition, then
     row), carried as a monotonically-increasing id across the shuffle.
-
-    Without a ``user_vec`` column the user vector IS the history mean
-    (the reference's cold-start path, model_service/models.py:64-88)
-    and a user with no known history item gets no recommendations.
 
     Plan shape: users and history rows (one union) hash into
     ``spark.sql.shuffle.partitions`` shards by xxhash64(user_id); the
@@ -132,8 +251,6 @@ def _fused_brute_cascade(
             StructField("rank", IntegerType(), False),
         ]
     )
-    k_recall, k_final = cfg.k_recall, cfg.k_final
-    k_short = min(cfg.k_rank, cfg.k_rerank)
 
     def score_shard(left, right):
         import numpy as np
@@ -141,100 +258,17 @@ def _fused_brute_cascade(
 
         is_hist = left["__hist"].to_numpy(bool)
         users_df = left[~is_hist].drop_duplicates("user_id")
-        if len(users_df) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {
-                    "user_id": left["user_id"][:0],
-                    "item_id": right["item_id"][:0],
-                    "rank": np.zeros(0, np.int32),
-                }
-            )
         hist = left[is_hist].sort_values("__seq", kind="stable")
-        right = right.sort_values("item_id", kind="stable")
         user_ids = users_df["user_id"].to_numpy()
-        item_ids = right["item_id"].to_numpy()
-        Vt = np.ascontiguousarray(np.stack(right["item_vec"].to_numpy()).T)
-        dim, n_items = Vt.shape
-
-        def fold(a, b):
-            # 0.0 + a[0]*b[0] + a[1]*b[1] + ... over the leading (vector)
-            # axis: each product in the operands' dtype, widened into a
-            # float64 accumulator left to right
-            acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
-            for d in range(dim):
-                acc += a[d] * b[d]
-            return acc
-
-        def cosine(num, denom):
-            out = np.zeros_like(num)
-            np.divide(num, denom, out=out, where=denom > 0)
-            return out
-
-        # history mean-pool, in history order
-        hu = pd.Index(user_ids).get_indexer(hist["user_id"])
-        hi = pd.Index(item_ids).get_indexer(hist["item_id"])
-        known = (hu >= 0) & (hi >= 0)
-        hu, hi = hu[known], hi[known]
-        hsum = np.zeros((len(user_ids), dim))
-        np.add.at(hsum, hu, Vt[:, hi].T.astype(np.float64))
-        cnt = np.bincount(hu, minlength=len(user_ids))
-        H = np.zeros_like(hsum)
-        np.divide(hsum, cnt[:, None], out=H, where=cnt[:, None] > 0)
-        if has_vec:
-            U = np.stack(users_df["user_vec"].to_numpy())
-            live = np.arange(len(user_ids))
-        else:
-            U = H
-            live = np.flatnonzero(cnt > 0)
-        Ht, Ut = np.ascontiguousarray(H.T), np.ascontiguousarray(U.T)
-        n_item = np.sqrt(fold(Vt, Vt))
-        n_hist = np.sqrt(fold(Ht, Ht))
-        n_user = np.sqrt(fold(Ut, Ut))
-        seen = np.unique(hu.astype(np.int64) * n_items + hi)
-
-        def top(keys, cand, valid, k):
-            # (valid first, score desc, item_id asc); lexsort's LAST key
-            # is primary and every pass is stable
-            order = np.lexsort((cand, -keys, ~valid), axis=-1)[:, :k]
-            return (
-                np.take_along_axis(cand, order, -1),
-                np.take_along_axis(valid, order, -1),
-            )
-
-        uid_out, iid_out, rank_out = [user_ids[:0]], [item_ids[:0]], [np.zeros(0, np.int32)]
-        k = min(k_recall, n_items)
-        # bound the per-chunk score and candidate-vector arrays
-        step = max(1, (1 << 20) // max(n_items, k * dim))
-        for lo in range(0, len(live), step):
-            r = live[lo : lo + step]
-            # M1 recall: dot(user, item) over every item, top k_recall
-            scores = fold(Ut[:, r, None], Vt[:, None, :])
-            cand = np.argsort(-scores, axis=-1, kind="stable")[:, :k]
-            # J6: history exclusion
-            valid = ~np.isin(r[:, None].astype(np.int64) * n_items + cand, seen)
-            # M3 rank: cosine(item, history mean), cut to min(k_rank, k_rerank)
-            rank_s = cosine(
-                fold(Vt[:, cand], Ht[:, r, None]),
-                n_item[cand] * n_hist[r, None],
-            )
-            cand, valid = top(rank_s, cand, valid, k_short)
-            # M4 rerank: cosine(user, item), top k_final
-            rerank_s = cosine(
-                fold(Ut[:, r, None], Vt[:, cand]),
-                n_user[r, None] * n_item[cand],
-            )
-            cand, valid = top(rerank_s, cand, valid, k_final)
-            rows, cols = np.nonzero(valid)
-            uid_out.append(user_ids[r[rows]])
-            iid_out.append(item_ids[cand[rows, cols]])
-            rank_out.append((cols + 1).astype(np.int32))
-        return pd.DataFrame(
-            {
-                "user_id": np.concatenate(uid_out),
-                "item_id": np.concatenate(iid_out),
-                "rank": np.concatenate(rank_out),
-            }
+        u, item_id, rank = cascade_kernel(
+            user_ids,
+            np.stack(users_df["user_vec"].to_numpy()) if has_vec and len(users_df) else None,
+            pd.Index(user_ids).get_indexer(hist["user_id"]),
+            hist["item_id"].to_numpy(),
+            item_side(right),
+            cfg,
         )
+        return pd.DataFrame({"user_id": user_ids[u], "item_id": item_id, "rank": rank})
 
     # user rows and history rows share one frame (cogroup takes two
     # sides); placeholders are non-null so Arrow keeps integer ids exact
@@ -296,8 +330,9 @@ def recommend(
     Returns (user_id, item_id, rank) with rank 1..k_final.
 
     With the three default scorers and ``recall_strategy="brute"`` the
-    whole cascade runs as one Arrow cogroup pass
-    (``_fused_brute_cascade``, bit-identical to the DataFrame plan).
+    whole cascade runs as one Arrow cogroup pass over
+    ``cascade_kernel`` (``_fused_brute_cascade``, bit-identical to the
+    DataFrame plan).
     A custom scorer Column, ``"brute_jvm"`` or ``"lsh"`` runs the
     DataFrame plan: items broadcast to every stage; the candidate set
     shrinks 100 -> 50 -> 20 -> 10 per user, so later stages are

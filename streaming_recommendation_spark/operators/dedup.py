@@ -640,9 +640,7 @@ def connected_components_star(
         .localCheckpoint()
     )
     # Parent-edge multiset, kept as distinct (u, v) pairs with u != v.
-    cur, cur_bytes = local_checkpoint_measured(
-        raw.where(F.col("u") != F.col("v")).distinct()
-    )
+    cur = raw.where(F.col("u") != F.col("v")).distinct().localCheckpoint()
     rounds = 0
     cur_count = cur.count()
     converged = cur_count == 0
@@ -723,13 +721,13 @@ def connected_components_star(
             .groupBy("v")
             .agg(F.min("w").alias("w"))
         )
-        small, sb = local_checkpoint_measured(
+        small = (
             small.join(parents, "v", "left")
             .select("u", F.coalesce("w", "v").alias("v"))
             .where(F.col("u") != F.col("v"))
             .distinct()
+            .localCheckpoint()
         )
-        cur_bytes = sb if sb is not None else cur_bytes
         # converged when the round was a no-op (star edges reproduce
         # themselves through both half-steps); cur's count is carried
         # from the previous round — no job re-launch

@@ -147,9 +147,12 @@ def checkpoint_partitioned(df, width: int | None = None,
     in bytes (block-manager metadata, no job) as ``(df, nbytes)``;
     nbytes is None when not visible (empty frame).
 
-    Caveat: the AQE flag is session-global, so a query PLANNED by a
-    concurrent thread/stream during the (brief, eager) materialization
-    would also skip AQE. The engine's operators run checkpoints
+    Caveat: both settings are session-global. During the (brief,
+    eager) materialization the session runs with AQE off and, when
+    ``width`` is given, with spark.sql.shuffle.partitions = ``width``
+    (often 1 for a small round), so a query PLANNED by a concurrent
+    thread/stream in that window would also skip AQE and lay out
+    every shuffle ``width`` wide. The engine's operators run checkpoints
     sequentially on the driver thread; if you embed them under a
     multi-threaded scheduler, serialize calls or use a separate
     SparkSession (newSession()) per thread.

@@ -8,8 +8,9 @@ scoring stage consumes the SAME micro-batch that wrote the profile:
 plan against the item embeddings, and writes
 ``recommendation_result:{user_id}:{timestamp}`` keys (the reference's
 result-key format, api_service/main.py:85) through the executor-side
-sink. No polling, no second system, and the cascade plan is the
-identical code path batch serving uses (cascade.recommend).
+sink. No polling, no second system, and the cascade math is the
+identical numpy kernel batch serving uses (cascade.recommend's
+cascade_kernel).
 """
 
 from __future__ import annotations
@@ -17,7 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cascade import CascadeConfig, recommend
+from ..cascade import CascadeConfig
+from ..cascade.recommend import cascade_kernel, item_side
 from .pipeline import parse_profile_stream
 from .sink import foreach_batch_writer
 
@@ -37,41 +39,84 @@ def score_batch(
     doubles as the result-key suffix, so no join-back is needed to
     recover the timestamp.
 
-    ``recommend`` gets the versions WITHOUT a user vector plus their
-    history rows in profile order, so the user vector is the mean of
-    the profile's known history-item vectors (the reference's
-    cold-start path, model_service/models.py:64-88) — fully
-    deterministic, no model weights needed. A history entry is known
-    when it is the string form of an item_id; unknown entries drop,
-    and a profile with no known entry gets no key.
+    The user vector is the mean of the profile's known history-item
+    vectors (the reference's cold-start path, model_service/
+    models.py:64-88) — fully deterministic, no model weights needed.
+    A history entry is known when it is the string form of an
+    item_id; unknown entries drop, and a profile with no known entry
+    gets no key. Scores are bit-identical to ``recommend``'s default
+    scorers (one ``cascade_kernel``, two feeders).
 
-    Plan shape: the default scorers run the fused cascade, so a
-    micro-batch is one cogroup (two exchanges: profiles, replicated
-    items), one exchange to gather each version's list, and the write
-    — about four Spark jobs per batch.
+    Plan shape: one narrow pass, no exchange. Every profile row
+    carries its whole history, so each partition of the batch scores
+    its own rows (mapInArrow over ``cascade_kernel``) and the writer's
+    foreachPartition follows in the same stage. The item side is
+    collected on the driver once per call — one job over ``items``,
+    which should be cached — and ships with the task. So a
+    micro-batch is two Spark jobs: the item collect and the write.
+
+    Duplicate versions: rows with the same (user_id, timestamp) in one
+    partition are one version whose history is their histories
+    concatenated in row order (as one profile listing them all).
+    A partition is scored whole, past Arrow's maxRecordsPerBatch. The
+    same version in two partitions — e.g. a batch that reads several
+    files carrying the same (user_id, timestamp) — is scored once per
+    partition, and each partition writes its own result.
     """
+    import pyarrow as pa
+
+    cfg = config or CascadeConfig()
+    item_type = items.schema["item_id"].dataType
+    table = items.select("item_id", "item_vec").toArrow()
+    side = item_side(table.to_pandas())
+    item_arrow = table.schema.field("item_id").type
+
+    def score_partition(batches):
+        import numpy as np
+        import pandas as pd
+        import pyarrow.compute as pc
+
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        part = pa.Table.from_batches(batches).combine_chunks()
+        hist = part.column("history").chunk(0)
+        codes, versions = pd.factorize(part.column("version").to_numpy())
+        u, item_id, _ = cascade_kernel(
+            versions,
+            None,
+            codes[pc.list_parent_indices(hist).to_numpy()],
+            pc.list_flatten(hist).to_numpy(zero_copy_only=False),
+            side,
+            cfg,
+        )
+        # u is grouped by version, in rank order within a version
+        counts = np.bincount(u, minlength=len(versions))
+        has = counts > 0
+        offsets = np.concatenate([[0], np.cumsum(counts[has])]).astype(np.int32)
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(versions[has], pa.string()),
+                pa.ListArray.from_arrays(offsets, pa.array(item_id, item_arrow)),
+            ],
+            ["version", "items"],
+        )
+
     version = F.concat_ws(":", F.col("user_id"), F.col("timestamp").cast("string"))
-    key = F.col("item_key")
-    item_id = key.try_cast(items.schema["item_id"].dataType)
-    history = (
-        profiles.select(version.alias("user_id"), F.explode("history_items").alias("item_key"))
-        # the item_id whose string form is this key, if any
-        .where(item_id.cast("string") == key)
-        .select("user_id", item_id.alias("item_id"))
+    # the history entries that are the string form of their own item_id
+    history = F.transform(
+        F.filter(
+            "history_items",
+            lambda key: key.try_cast(item_type).cast("string") == key,
+        ),
+        lambda key: key.try_cast(item_type),
     )
-    users = profiles.select(version.alias("user_id"))
-    recs = recommend(users, items, history, config or CascadeConfig())
-    per_version = recs.groupBy("user_id").agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("rank", "item_id"))),
-            lambda s: s["item_id"].cast("string"),
-        ).alias("items")
+    scored = profiles.select(version.alias("version"), history.alias("history")).mapInArrow(
+        score_partition, f"version string, items array<{item_type.simpleString()}>"
     )
-    return per_version.select(
-        F.concat_ws(
-            ":", F.lit("recommendation_result"), F.col("user_id")
-        ).alias("key"),
-        F.to_json("items").alias("value"),
+    return scored.select(
+        F.concat_ws(":", F.lit("recommendation_result"), F.col("version")).alias("key"),
+        F.to_json(F.transform("items", lambda i: i.cast("string"))).alias("value"),
     )
 
 

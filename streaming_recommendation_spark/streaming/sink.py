@@ -38,14 +38,17 @@ class JsonlDirSink:
         # wall-clock ns prefix so read_all's filename sort resolves
         # last-write-wins in WRITE order across batches — a pure
         # random uuid name made cross-batch upserts of the same key
-        # pick a nondeterministic winner (within a batch each key is
-        # written by exactly one partition, so intra-batch ties can't
-        # happen). Real Redis SET has true last-write semantics; the
-        # test double must too. time_ns is wall-clock, not strictly
-        # monotonic: an NTP step-back between batches could still
-        # reorder — acceptable for a same-machine test double whose
-        # batches are seconds apart (monotonic_ns has per-process
-        # epochs, useless across executor processes).
+        # pick a nondeterministic winner. Within a batch a key is
+        # normally written by one partition; a key two partitions of
+        # one batch both write (score_batch: the same profile version
+        # read from two files, each partition scoring its own rows)
+        # gets a filename-order winner. Real Redis SET
+        # has true last-write semantics; the test double must too.
+        # time_ns is wall-clock, not strictly monotonic: an NTP
+        # step-back between batches could still reorder — acceptable
+        # for a same-machine test double whose batches are seconds
+        # apart (monotonic_ns has per-process epochs, useless across
+        # executor processes).
         fname = os.path.join(
             self.path, f"part-{time.time_ns():020d}-{uuid.uuid4().hex}.jsonl"
         )

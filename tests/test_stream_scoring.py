@@ -257,9 +257,11 @@ def test_score_batch_matches_jvm_reference(spark, items):
 
 def test_score_batch_job_count(spark, items, tmp_path):
     """One micro-batch of the streaming leg (score_batch +
-    foreach_batch_writer) runs as a handful of Spark jobs: the fused
-    cascade's cogroup, the per-version gather and the write — not one
-    job per cascade stage (the DataFrame plan took ~20)."""
+    foreach_batch_writer) over the cached item frame runs as two Spark
+    jobs: the driver-side collect of the item side and the write,
+    whose stage scores each partition in place — not one job per
+    cascade stage (the DataFrame plan took ~20) nor a cogroup plus a
+    per-version gather (4)."""
     from streaming_recommendation_spark.streaming.pipeline import parse_profile_stream
     from streaming_recommendation_spark.streaming.sink import foreach_batch_writer
 
@@ -276,11 +278,75 @@ def test_score_batch_job_count(spark, items, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 6, jobs
+    assert 0 < len(jobs) <= 2, jobs
     assert set(sink.read_all()) == {
         "recommendation_result:100:1700000100",
         "recommendation_result:200:1700000200",
     }
+
+
+def test_score_batch_plan_has_no_exchange(spark, items):
+    """Every profile row carries its whole history, so score_batch
+    scores each partition where it is: the executed plan holds the
+    per-partition Arrow pass and no Exchange (no history shuffle, no
+    per-shard item replication, no per-version gather)."""
+    records = score_batch(spark.createDataFrame(profile_messages()), items)
+    assert len(records.collect()) == 2
+    plan = records._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    assert "Exchange" not in plan, plan
+
+
+def _records(df):
+    return sorted((r.key, r.value) for r in df.collect())
+
+
+def test_score_batch_independent_of_partitioning(spark, items):
+    """The same profiles written as one partition or spread over three
+    (repartition(3)) give identical records: each version is scored
+    from its own row alone."""
+    profiles = spark.createDataFrame(
+        [
+            {"user_id": str(u), "history_items": [str(u + d) for d in (0, 7, 19)], "timestamp": t}
+            for u in range(1, 13)
+            for t in (1_700_000_000 + u, 1_700_000_500 + u)
+        ]
+    )
+    single = _records(score_batch(profiles.coalesce(1), items))
+    spread = profiles.repartition(3)
+    assert min(spread.rdd.glom().map(len).collect()) > 0
+    assert _records(score_batch(spread, items)) == single
+    assert len(single) == 24
+
+
+def test_score_batch_merges_duplicate_versions_in_a_partition(spark, items):
+    """Two rows with one (user_id, timestamp) and different histories
+    in one partition are one version: histories concatenated in row
+    order, as the JVM reference's history join merges them — even when
+    Arrow hands the partition over one row per batch."""
+    from streaming_recommendation_spark.cascade import CascadeConfig
+
+    profiles = spark.createDataFrame(
+        [
+            {"user_id": "600", "history_items": ["1", "2", "abc"], "timestamp": 1_700_000_600},
+            {"user_id": "600", "history_items": ["40", "41"], "timestamp": 1_700_000_600},
+            {"user_id": "700", "history_items": ["9"], "timestamp": 1_700_000_700},
+        ]
+    ).coalesce(1)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "1")
+    try:
+        for cfg in (CascadeConfig(), CascadeConfig(k_recall=30, k_rank=6, k_rerank=9, k_final=4)):
+            got = _records(score_batch(profiles, items, cfg))
+            assert [k for k, _ in got] == [
+                "recommendation_result:600:1700000600",
+                "recommendation_result:700:1700000700",
+            ]
+            assert {k: json.loads(v) for k, v in got} == _jvm_reference(profiles, items, cfg)
+            assert not {"1", "2", "40", "41"} & set(json.loads(got[0][1]))
+    finally:
+        spark.conf.set(conf, prev)
 
 
 def test_ewma_state_matches_batch_across_microbatches(spark, tmp_path):
