@@ -7,20 +7,31 @@ of the registry, so every rotation edit must verify that
   2. every prefix name actually resolves in the registry
      (a typo would silently yield its slot to an already-gated row).
 
-Usage: python scripts/check_rotation.py CORRECTNESS_r07.json
+Usage: python scripts/check_rotation.py [CORRECTNESS_rNN.json]
+(default: the highest-numbered CORRECTNESS_r*.json in the repo root)
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+
+def latest_correctness() -> str:
+    """The newest round's gate file: CORRECTNESS_r*.json with the
+    highest round number (numeric, so r10 sorts after r09)."""
+    paths = glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))
+    return max(paths, key=lambda p: int(re.search(r"_r(\d+)\.json$", p).group(1)))
 
 
 def main() -> int:
-    prev_path = sys.argv[1] if len(sys.argv) > 1 else "CORRECTNESS_r07.json"
+    prev_path = sys.argv[1] if len(sys.argv) > 1 else latest_correctness()
     from streaming_recommendation_spark.queries import (
         _DRIVER_PRIORITY,
         registry,

@@ -83,26 +83,19 @@ ROUND_TARGET_BYTES = int(
 )
 
 
-def _persisted_ids(sess) -> set[int]:
-    jsc = sess.sparkContext._jsc.sc()
-    return {info.id() for info in jsc.getRDDStorageInfo()}
-
-
-def _new_persisted_bytes(sess, before: set[int]) -> int | None:
-    """Bytes of the RDD persisted since ``before`` was captured —
-    driver-side block-manager metadata, NO job. When the measured
-    action also materialized upstream lazy persists, the checkpoint
-    RDD is the one created LAST (highest id). Returns None when no
-    new persisted entry is visible (e.g. an empty frame — the block
-    manager only lists RDDs with cached bytes)."""
-    jsc = sess.sparkContext._jsc.sc()
-    fresh = [
-        info for info in jsc.getRDDStorageInfo() if info.id() not in before
-    ]
-    if not fresh:
-        return None
-    newest = max(fresh, key=lambda info: info.id())
-    return int(newest.memSize() + newest.diskSize())
+def _checkpoint_bytes(out) -> int | None:
+    """Bytes of ``out``'s own localCheckpoint RDD — driver-side
+    block-manager metadata, NO job. A checkpointed DataFrame's
+    analyzed plan is a ``LogicalRDD`` over exactly that RDD, so an
+    upstream persist the same action materialized is never credited.
+    Returns None when the RDD holds no cached bytes (e.g. an empty
+    frame — the block manager only lists RDDs with cached blocks)."""
+    rdd_id = out._jdf.queryExecution().analyzed().rdd().id()
+    jsc = out.sparkSession.sparkContext._jsc.sc()
+    for info in jsc.getRDDStorageInfo():
+        if info.id() == rdd_id:
+            return int(info.memSize() + info.diskSize())
+    return None
 
 
 def round_width(nbytes: int | None, sess, target_bytes: int | None = None):
@@ -163,14 +156,13 @@ def checkpoint_partitioned(df, width: int | None = None,
     sess.conf.set("spark.sql.adaptive.enabled", "false")
     if width is not None:
         sess.conf.set("spark.sql.shuffle.partitions", str(int(width)))
-    before = _persisted_ids(sess) if return_bytes else None
     try:
         out = df.localCheckpoint()
     finally:
         sess.conf.set("spark.sql.adaptive.enabled", old)
         sess.conf.set("spark.sql.shuffle.partitions", old_sp)
     if return_bytes:
-        return out, _new_persisted_bytes(sess, before)
+        return out, _checkpoint_bytes(out)
     return out
 
 
@@ -203,7 +195,5 @@ def local_checkpoint_measured(df):
     read as ``checkpoint_partitioned(return_bytes=True)``; used by
     iterative operators to size the NEXT round's layout from the
     frame they just materialized."""
-    sess = df.sparkSession
-    before = _persisted_ids(sess)
     out = df.localCheckpoint()
-    return out, _new_persisted_bytes(sess, before)
+    return out, _checkpoint_bytes(out)

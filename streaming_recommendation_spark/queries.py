@@ -4077,108 +4077,70 @@ def q103_cascade_lsh_recall(spark, sf_dir):
     )
 
 
-# Round-11 driver-gate prefix (VERDICT r10 #1). Steady-state policy:
-# lead with rows that have NO external green under their current name
-# (this round: q209-q219, all judge-verified green in the round-10
-# verdict but never driver-gated — 11 rows), then the rows whose last
-# EXTERNAL driver-verified green is oldest: the 8 spilled r6 rows
-# Round-12 gate (VERDICT r11 #1): head = q220-q233 (14 rows registered
-# in round 11, judge-verified but never externally driver-gated), then
-# the 19 remaining r7-stale rows, then the 17 oldest rows of the
-# r8-cohort (CORRECTNESS_r08 order, never re-gated since r8).
-# 14 + 19 + 17 = 50 exactly. Zero overlap with CORRECTNESS_r11's key
-# set (scripts/check_rotation.py, run at every edit of this list).
-# The 33 remaining r8-cohort rows queue behind the prefix for round
-# 13; queries registered NEW in round 12 queue behind those.
+# Driver-gate prefix (the driver gates the first 50 registry rows per
+# round). Round-13's gate re-checked round 12's exact set, so this
+# rotation targets the rows whose current results no external gate has
+# checked: those whose plans round 13 and the fused-cascade kernels
+# changed (checked only in-repo by scripts/driver_sim.py at sf0.01), then
+# the rows registered in round 12 that were never gated at all, then
+# the oldest-gated row. 33 + 6 + 10 + 1 = 50 exactly, every
+# one with a SQL oracle. Zero overlap with the newest CORRECTNESS file
+# (scripts/check_rotation.py, run at every edit of this list).
 _DRIVER_PRIORITY.extend([
-    # --- never externally green (registered round 11; 14 rows) ---
-    "q220_compacted_hybrid_twin",
-    "q221_compacted_passage_twin",
-    "q222_compacted_pq_twin",
-    "q223_erased_hybrid_twin",
-    "q224_streaming_categorical_drift_twin",
-    "q225_trained_rerank",
-    "q226_trained_rerank_ablation",
-    "q227_mmr_diversified_topk",
-    "q228_store_packing_twin",
-    "q229_graded_ndcg_readout",
-    "q230_domain_mixture_quota",
-    "q231_diversity_tradeoff_readout",
-    "q232_erased_packing_twin",
-    "q233_compacted_dedup_twin",
-    # --- last external green: round 7 (the 19 remaining r7-stale) ---
-    "q142_random_walks",
-    "q143_swing_similarity",
-    "q137_compacted_ivf_twin",
-    "q138_mergeable_histogram_twin",
-    "q61_shipping_volume_between_nations",
-    "q63_lineitems_by_quantity_band",
-    "q64_brand_revenue_ratio",
-    "q75_order_count_distribution",
-    "q76_important_parts",
-    "q77_top_revenue_supplier",
-    "q79_large_volume_orders",
-    "q80_disjunctive_revenue",
-    "q81_heavy_shippers_of_red_parts",
-    "q82_nation_year_profit",
-    "q83_returned_item_customers",
-    "q87_grouping_sets_events",
-    "q88_embedding_quantization",
-    "q89_decontamination",
-    "q90_repetition_filters",
-    # --- last external green: round 8 (17 oldest of 50; r8 order) ---
-    "q172_cascade_offline_eval",
-    "q173_streaming_anomaly_twin",
-    "q174_snapshot_audit",
-    "q175_near_dedup_pipeline",
-    "q176_pmi_collocations",
-    "q91_domain_quota",
-    "q92_doc_chunking",
-    "q93_sequence_packing",
-    "q94_duplicate_ngram_spans",
-    "q94b_duplicate_ngram_spans_occurrences",
-    "q95_unigram_rarity",
-    "q96_semantic_dedup",
-    "q97_bpe_merge_candidates",
-    "q98_importance_weights",
-    "q99_calibration_bins",
-    "q100_ewma_engagement",
-    "q101_image_phash",
-    # ---------------- end of the 50-row gate prefix ----------------
-    # r8-cohort remainder (33 rows; gate in round 13, r8 order)
-    "q102_pagerank",
-    "q103_cascade_lsh_recall",
+    # --- plans changed in round 13 (7 + 19 + 7 rows) ---
     "q104_exact_substring_dups",
-    "q60_cube_order_stats",
-    "q62_region_market_share",
-    "q74_min_cost_supplier",
-    "q78_supplier_part_counts",
-    "q84_corpus_curation",
     "q105_bpe_learned_merges",
     "q106_bpe_token_counts",
     "q107_dup_length_profile",
-    "q108_session_windows",
     "q109_triangle_counts",
-    "q110_bigram_rarity",
-    "q111_zorder_profile",
-    "q112_event_funnel",
-    "q113_cohort_retention",
-    "q114_mixing_weights",
-    "q115_mmr_rerank",
-    "q116_prefix_jaccard_dups",
-    "q117_histogram_quantiles",
-    "q118_hll_distinct",
-    "q119_bloom_decontamination",
-    "q120_priority_sample",
-    "q121_scd2_intervals",
-    "q122_local_supplier_volume",
-    "q123_forecast_revenue_change",
-    "q124_cms_heavy_hitters",
-    "q125_column_profile",
-    "q126_kmv_set_stats",
-    "q127_decayed_popularity",
-    "q128_event_transitions",
     "q129_largestar_components",
+    "q72_dedup_clusters",
+    "q145_bfs_distances",
+    "q146_skipgram_pairs",
+    "q147_bm25_postings",
+    "q148_personalized_pagerank",
+    "q149_gap_fill_locf",
+    "q150_fuzzy_name_pairs",
+    "q151_skipgram_negatives",
+    "q152_kcore_peeling",
+    "q153_rolling_dense_stats",
+    "q154_weighted_negatives",
+    "q155_continuous_aggregate_twin",
+    "q156_contrastive_triplets",
+    "q157_funnel_conversion",
+    "q158_cohort_retention",
+    "q159_event_transitions",
+    "q160_streaming_funnel_twin",
+    "q161_feature_hashing",
+    "q162_target_encoding",
+    "q163_lightgcn_propagation",
+    "q183_tokenize_pack_pipeline",
+    "q186_curation_pipeline",
+    "q205_curation_funnel_report",
+    "q211_salvaged_curation_manifest",
+    "q212_salvage_savings_report",
+    "q243_interleaved_eval",
+    "q102_pagerank",
+    # --- cascade rows re-planned by the fused kernels ---
+    "q40_cascade_recommend",
+    "q178_cascade_full_eval",
+    "q179_list_diversity",
+    "q180_catalog_coverage",
+    "q235_cascade_graded_ndcg",
+    "q245_capped_slate",
+    # --- registered in round 12, never externally gated ---
+    "q234_mixed_generation_hybrid_twin",
+    "q236_resolved_adc_twin",
+    "q237_filtered_knn",
+    "q238_filtered_ann_recall",
+    "q239_generation_diff_twin",
+    "q240_maxsim_rerank",
+    "q241_store_maxsim_twin",
+    "q242_maxsim_ablation",
+    "q244_incremental_stats_twin",
+    "q246_point_in_time_features",
+    # --- oldest external green: round 8 ---
+    "q103_cascade_lsh_recall",
 ])
 
 

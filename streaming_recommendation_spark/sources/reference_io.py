@@ -152,7 +152,7 @@ def to_kafka_records(df: DataFrame) -> DataFrame:
     """S8: serialize rows to the reference's Kafka payload shape —
     (key, value) where value is the JSON object the consumer's
     from_json expects (producer.py:69-73). Feed to
-    ``.write.format('kafka')`` (batch) or ``writeStream`` when a
+    ``.write.format('kafka')`` (batch, or its streaming twin) when a
     broker is available."""
     return df.select(
         F.col("user_id").cast("string").alias("key"),

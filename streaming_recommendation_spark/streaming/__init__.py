@@ -8,11 +8,11 @@ from .pipeline import (
     read_kafka_stream,
     session_window_activity,
     sliding_window_activity,
+    start_fold,
     versioned_profile_records,
 )
 from .dedup import (
     dedup_ingest_batch,
-    dedup_ingest_pipeline,
     read_candidates,
 )
 from .scd2 import Scd2Stream
@@ -23,7 +23,6 @@ from .sketches import (
     HllStreamSketch,
     read_sketch_state,
     sketch_ingest_batch,
-    sketch_stream_pipeline,
 )
 
 __all__ = [
@@ -36,15 +35,14 @@ __all__ = [
     "read_kafka_stream",
     "session_window_activity",
     "sliding_window_activity",
+    "start_fold",
     "versioned_profile_records",
     "dedup_ingest_batch",
-    "dedup_ingest_pipeline",
     "read_candidates",
     "CmsStreamSketch",
     "HllStreamSketch",
     "read_sketch_state",
     "sketch_ingest_batch",
-    "sketch_stream_pipeline",
     "Scd2Stream",
     "VectorIndexStream",
     "JsonlDirSink",

@@ -157,41 +157,6 @@ def curation_ingest_batch(
         new_sigs.unpersist()
 
 
-def curation_ingest_pipeline(
-    doc_stream: DataFrame,
-    index_dir: str,
-    verdicts_dir: str,
-    checkpoint_dir: str,
-    threshold_milli: int = 500,
-    num_hashes: int = 16,
-    bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    trigger_available_now: bool = True,
-):
-    """Start the streaming curation-ingest query over a document
-    stream (columns: ``id_col``, ``text_col``). Returns the
-    StreamingQuery. State = the signature index directory (same
-    contract as dedup_ingest_pipeline: the index outlives the query;
-    the checkpoint tracks only source offsets)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        curation_ingest_batch(
-            batch_df, batch_id, index_dir, verdicts_dir, threshold_milli,
-            num_hashes, bands, text_col, id_col, n,
-        )
-
-    writer = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def read_verdicts(spark: SparkSession, verdicts_dir: str) -> DataFrame:
     """All verdicts emitted so far: (doc_id, quality_kept, is_dup,
     admitted, batch_id)."""
@@ -321,43 +286,6 @@ def salvage_ingest_batch(
     finally:
         new_sigs.unpersist()
         new_hashes.unpersist()
-
-
-def salvage_ingest_pipeline(
-    doc_stream: DataFrame,
-    sig_index_dir: str,
-    passage_index_dir: str,
-    manifest_dir: str,
-    checkpoint_dir: str,
-    threshold_milli: int = 500,
-    num_hashes: int = 16,
-    bands: int = 4,
-    window: int = 16,
-    stride: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    trigger_available_now: bool = True,
-):
-    """Start the streaming salvage-ingest query. State = the two index
-    directories (they outlive the query; the checkpoint tracks only
-    source offsets)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        salvage_ingest_batch(
-            batch_df, batch_id, sig_index_dir, passage_index_dir,
-            manifest_dir, threshold_milli, num_hashes, bands, window,
-            stride, text_col, id_col, n,
-        )
-
-    writer = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_salvage_manifests(

@@ -115,51 +115,6 @@ def dedup_ingest_batch(
         new_sigs.unpersist()
 
 
-def dedup_ingest_pipeline(
-    doc_stream: DataFrame,
-    index_dir: str,
-    candidates_dir: str,
-    checkpoint_dir: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    trigger_available_now: bool = True,
-):
-    """Start the streaming ingest-dedup query over a document stream
-    (columns: ``id_col``, ``text_col``). Returns the StreamingQuery.
-
-    State = the signature index directory, NOT the state store: the
-    index must outlive the query (it is the corpus-wide dedup
-    artifact other jobs join against), so it lives in storage keyed
-    by batch_id for idempotence, and the checkpoint only tracks
-    source offsets.
-    """
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_ingest_batch(
-            batch_df,
-            batch_id,
-            index_dir,
-            candidates_dir,
-            num_hashes,
-            bands,
-            text_col,
-            id_col,
-            n,
-        )
-
-    writer = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def read_candidates(spark: SparkSession, candidates_dir: str) -> DataFrame:
     """All candidate pairs emitted so far: (new_id, existing_id,
     batch_id). Distinct across batches is NOT applied — each row

@@ -56,35 +56,6 @@ def drift_ingest_batch(
     )
 
 
-def drift_ingest_pipeline(
-    value_stream: DataFrame,
-    counts_dir: str,
-    checkpoint_dir: str,
-    lohi: DataFrame,
-    value_col: str,
-    nbins: int = 10,
-    trigger_available_now: bool = True,
-):
-    """Start the streaming drift-monitor query over a stream carrying
-    ``value_col``. Returns the StreamingQuery. State = the per-batch
-    bin-count directory (it outlives the query; the checkpoint tracks
-    only source offsets)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        drift_ingest_batch(
-            batch_df, batch_id, counts_dir, lohi, value_col, nbins
-        )
-
-    writer = (
-        value_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def merged_counts(spark: SparkSession, counts_dir: str) -> DataFrame:
     """The running current-distribution counts: all batches so far,
     summed per bin (exactly the one-shot counts, by mergeability)."""
@@ -144,30 +115,6 @@ def categorical_ingest_batch(
         .partitionBy("batch_id")
         .parquet(counts_dir)
     )
-
-
-def categorical_ingest_pipeline(
-    value_stream: DataFrame,
-    counts_dir: str,
-    checkpoint_dir: str,
-    cat_col: str,
-    trigger_available_now: bool = True,
-):
-    """Start the streaming categorical-drift query over a stream
-    carrying ``cat_col``. Returns the StreamingQuery. State = the
-    per-batch category-count directory."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        categorical_ingest_batch(batch_df, batch_id, counts_dir, cat_col)
-
-    writer = (
-        value_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merged_categorical_counts(

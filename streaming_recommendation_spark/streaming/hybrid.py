@@ -85,46 +85,6 @@ def vectors_ingest_batch(
     )
 
 
-def vectors_ingest_pipeline(
-    doc_stream: DataFrame,
-    vectors_dir: str,
-    checkpoint_dir: str,
-    n_features: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    trigger_available_now: bool = True,
-    base_dir: str | None = None,
-    compact_every: int | None = None,
-):
-    """Start the streaming doc-vector ingest over a document stream
-    (columns: ``id_col``, ``text_col``). Returns the StreamingQuery.
-    State = the vectors directory (it outlives the query; the
-    checkpoint tracks only source offsets). ``compact_every=N``
-    (requires ``base_dir``) runs the periodic fold in-stream after
-    every Nth batch — safe while live (the newest delta never
-    folds)."""
-    if compact_every and base_dir is None:
-        raise ValueError("compact_every requires base_dir")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        vectors_ingest_batch(
-            batch_df, batch_id, vectors_dir, n_features, text_col, id_col
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_doc_vectors(
-                batch_df.sparkSession, vectors_dir, base_dir, id_col
-            )
-
-    writer = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def read_doc_vectors(
     spark: SparkSession,
     vectors_dir: str,

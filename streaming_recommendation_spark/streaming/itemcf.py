@@ -245,25 +245,5 @@ class ItemCfStream:
             min_pair_users,
         )
 
-    # --- streaming entry ------------------------------------------------------
-
-    def pipeline(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str,
-        trigger_available_now: bool = True,
-    ):
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            self.ingest_batch(batch_df, batch_id)
-
-        writer = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
 
 __all__ = ["ItemCfStream"]

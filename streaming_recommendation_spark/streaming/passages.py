@@ -133,38 +133,6 @@ def passage_ingest_batch(
     )
 
 
-def passage_ingest_pipeline(
-    doc_stream: DataFrame,
-    index_dir: str,
-    manifest_dir: str,
-    checkpoint_dir: str,
-    window: int = 16,
-    stride: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    trigger_available_now: bool = True,
-):
-    """Start the streaming passage-dedup query over a document stream
-    (columns: ``id_col``, ``text_col``). Returns the StreamingQuery.
-    State = the passage-hash index directory (it outlives the query;
-    the checkpoint tracks only source offsets)."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        passage_ingest_batch(
-            batch_df, batch_id, index_dir, manifest_dir, window, stride,
-            text_col, id_col,
-        )
-
-    writer = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def read_manifests(spark: SparkSession, manifest_dir: str) -> DataFrame:
     """All per-doc manifests emitted so far."""
     return spark.read.schema(_MANIFEST_SCHEMA).parquet(manifest_dir)

@@ -16,6 +16,9 @@ proper Structured Streaming plan:
   S7   executor-side KV sink      replaces consumer.py:50-70 driver
        collect() (see sink.py)
 
+``start_fold`` is the one foreachBatch driver every streaming leg of
+the package runs on (this ingest, the scoring leg, every store fold).
+
 The same parsed-stream plan runs in batch mode for backfills — the
 transformations are mode-agnostic DataFrame ops.
 """
@@ -93,12 +96,58 @@ def versioned_profile_records(parsed: DataFrame) -> DataFrame:
     )
 
 
+def start_fold(
+    stream: DataFrame,
+    fold,
+    checkpoint_dir: str,
+    compact=None,
+    compact_every: int | None = None,
+):
+    """Run ``fold(batch_df, batch_id)`` over every micro-batch of
+    ``stream`` through ``foreachBatch`` (trigger availableNow: drain
+    what the source holds, then stop). Returns the started query.
+
+    Every streaming leg of this package is this one fold; its
+    contract, stated once:
+
+    * the store outlives the query — the fold keeps its state in
+      storage keyed by ``batch_id`` (the corpus-wide index other jobs
+      read), not in the query's state store;
+    * the checkpoint tracks only source offsets;
+    * a redelivered ``batch_id`` must overwrite exactly its own
+      attempt (dynamic partition overwrite of ``batch_id=<id>``, or a
+      versioned ``v=<id>`` write), so at-least-once delivery stores
+      each batch once;
+    * compaction never folds the newest (in-flight) delta. With
+      ``compact_every=N``, ``compact(spark)`` runs after the fold on
+      every ``batch_id > 0`` divisible by N. The compactors'
+      default upper bound excludes the newest delta — this very
+      batch, whose checkpoint has not committed — so it is safe while
+      live, and a redelivery re-runs a no-op compact and rewrites
+      only its own delta.
+    """
+    if compact_every and compact is None:
+        raise ValueError("compact_every requires compact")
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        fold(batch_df, batch_id)
+        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
+            compact(batch_df.sparkSession)
+
+    return (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def profile_pipeline(
     raw_stream: DataFrame,
     sink,
     checkpoint_dir: str,
     watermark: str = "10 minutes",
-    trigger_available_now: bool = True,
 ):
     """Full ingest pipeline: parse -> watermark -> dedup -> versioned
     KV writes on the executors. Returns the started StreamingQuery.
@@ -114,15 +163,9 @@ def profile_pipeline(
     deduped = parsed.withWatermark("event_time", watermark).dropDuplicatesWithinWatermark(
         ["user_id", "timestamp"]
     )
-    records = versioned_profile_records(deduped)
-    writer = (
-        records.writeStream.foreachBatch(foreach_batch_writer(sink))
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return start_fold(
+        versioned_profile_records(deduped), foreach_batch_writer(sink), checkpoint_dir
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # Click message schema for the stream-stream enrichment leg (the

@@ -92,47 +92,6 @@ def postings_ingest_batch(
     )
 
 
-def postings_ingest_pipeline(
-    doc_stream: DataFrame,
-    postings_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    trigger_available_now: bool = True,
-    base_dir: str | None = None,
-    compact_every: int | None = None,
-):
-    """Start the streaming postings-ingest query over a document
-    stream (columns: ``id_col``, ``text_col``). Returns the
-    StreamingQuery. State = the postings directory (it outlives the
-    query; the checkpoint tracks only source offsets).
-    ``compact_every=N`` (requires ``base_dir``) runs the periodic
-    fold in-stream after every Nth batch — safe while live because
-    compact_store's default never folds the newest delta (this very
-    batch, whose checkpoint has not committed yet); a redelivery
-    re-runs a no-op compact and rewrites only its own delta."""
-    if compact_every and base_dir is None:
-        raise ValueError("compact_every requires base_dir")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        postings_ingest_batch(
-            batch_df, batch_id, postings_dir, text_col, id_col
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_postings(
-                batch_df.sparkSession, postings_dir, base_dir, id_col
-            )
-
-    writer = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def _check_id_col(
     spark, delta_dir: str, id_col: str, fn: str, base_dir: str | None = None
 ) -> None:
@@ -293,41 +252,6 @@ def positional_ingest_batch(
         .partitionBy("batch_id")
         .parquet(postings_dir)
     )
-
-
-def positional_ingest_pipeline(
-    doc_stream: DataFrame,
-    postings_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    trigger_available_now: bool = True,
-    base_dir: str | None = None,
-    compact_every: int | None = None,
-):
-    """Start the streaming positional-postings ingest. Same contract
-    as postings_ingest_pipeline (including the in-stream periodic
-    compaction hook)."""
-    if compact_every and base_dir is None:
-        raise ValueError("compact_every requires base_dir")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        positional_ingest_batch(
-            batch_df, batch_id, postings_dir, text_col, id_col
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_positional(
-                batch_df.sparkSession, postings_dir, base_dir, id_col
-            )
-
-    writer = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_positional_postings(

@@ -110,50 +110,6 @@ def pq_ingest_batch(
     )
 
 
-def pq_ingest_pipeline(
-    vec_stream: DataFrame,
-    codes_dir: str,
-    books_path: str,
-    dim: int,
-    scale: int = 1 << 20,
-    offset: float = 2.0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
-    trigger_available_now: bool = True,
-    base_dir: str | None = None,
-    compact_every: int | None = None,
-):
-    """Start the streaming PQ-codes ingest over a vector stream
-    (columns: ``id_col``, ``vec_col``). The books MUST already exist
-    at ``books_path`` (load_books raises otherwise). Returns the
-    StreamingQuery. ``compact_every=N`` (requires ``base_dir``) runs
-    the periodic fold in-stream after every Nth batch (the newest
-    delta never folds)."""
-    if compact_every and base_dir is None:
-        raise ValueError("compact_every requires base_dir")
-    books = load_books(books_path)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        pq_ingest_batch(
-            batch_df, batch_id, codes_dir, books, dim, scale, offset,
-            id_col, vec_col,
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_codes(
-                batch_df.sparkSession, codes_dir, base_dir, len(books), id_col
-            )
-
-    writer = (
-        vec_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def read_codes(
     spark: SparkSession,
     codes_dir: str,

@@ -112,25 +112,5 @@ class Scd2Stream:
         # that pruning happens on the NEXT successful batch instead.
         prune_buckets(self.state_dir, batch_id, self.keep_versions)
 
-    def pipeline(
-        self,
-        stream: DataFrame,
-        checkpoint_dir: str,
-        trigger_available_now: bool = True,
-    ):
-        """Run the maintenance loop over a change-record stream."""
-
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            self.ingest_batch(batch_df, batch_id)
-
-        writer = (
-            stream.writeStream.foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-        )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
 
 __all__ = ["Scd2Stream", "scd2_apply_batch", "scd2_intervals"]

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..cascade import CascadeConfig
 from ..cascade.recommend import cascade_kernel, item_side
-from .pipeline import parse_profile_stream
+from .pipeline import parse_profile_stream, start_fold
 from .sink import foreach_batch_writer
 
 
@@ -129,16 +129,9 @@ def recommendation_pipeline(
 ):
     """Full streaming leg: parse -> per-micro-batch cascade -> keyed
     sink. Returns the started query."""
+    writer = foreach_batch_writer(sink)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        records = score_batch(batch_df, items, config)
-        foreach_batch_writer(sink)(records, batch_id)
+        writer(score_batch(batch_df, items, config), batch_id)
 
-    parsed = parse_profile_stream(raw_stream)
-    return (
-        parsed.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_fold(parse_profile_stream(raw_stream), handle, checkpoint_dir)

@@ -235,31 +235,6 @@ def sketch_ingest_batch(
     prune_snapshots(state_dir, batch_id, keep_versions)
 
 
-def sketch_stream_pipeline(
-    stream: DataFrame,
-    sketch,
-    state_dir: str,
-    checkpoint_dir: str,
-    keep_versions: int = 3,
-    trigger_available_now: bool = True,
-):
-    """Run a mergeable sketch over a stream; returns the
-    StreamingQuery. Query the state any time with
-    :func:`read_sketch_state` + the sketch's finalize/estimate."""
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sketch_ingest_batch(batch_df, batch_id, sketch, state_dir, keep_versions)
-
-    writer = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def read_sketch_state(
     spark: SparkSession, state_dir: str, schema: str
 ) -> DataFrame:

@@ -107,48 +107,6 @@ def tokens_ingest_batch(
     )
 
 
-def tokens_ingest_pipeline(
-    doc_stream: DataFrame,
-    stats_dir: str,
-    merges_path: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    domain_col: str = "source",
-    trigger_available_now: bool = True,
-    base_dir: str | None = None,
-    compact_every: int | None = None,
-):
-    """Start the streaming token-accounting query over a document
-    stream (columns: ``id_col``, ``domain_col``, ``text_col``). The
-    merges MUST already exist at ``merges_path`` (load_merges raises
-    otherwise). Returns the StreamingQuery. ``compact_every=N``
-    (requires ``base_dir``) runs the periodic fold in-stream after
-    every Nth batch (the newest delta never folds)."""
-    if compact_every and base_dir is None:
-        raise ValueError("compact_every requires base_dir")
-    merges = load_merges(merges_path)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        tokens_ingest_batch(
-            batch_df, batch_id, stats_dir, merges, text_col, id_col,
-            domain_col,
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_token_stats(
-                batch_df.sparkSession, stats_dir, base_dir, id_col
-            )
-
-    writer = (
-        doc_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def read_token_stats(
     spark: SparkSession,
     stats_dir: str,

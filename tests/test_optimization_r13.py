@@ -77,6 +77,22 @@ def test_local_checkpoint_measured_reports_bytes(spark):
     assert nbytes is not None and nbytes > 0
     assert out.count() == 5000
 
+    # an upstream persist the SAME action materializes gets its own
+    # storage entry; the reported bytes are still exactly the
+    # checkpoint's (equal to checkpointing the same rows with no
+    # persist upstream), not the upstream's and not their sum
+    sc = spark.sparkContext._jsc.sc()
+    up = spark.range(5000).selectExpr("id", "id * 3 as w").persist()
+    try:
+        cached_before = {i.id() for i in sc.getRDDStorageInfo()}
+        out2, nbytes2 = local_checkpoint_measured(up.selectExpr("id * 2 as v"))
+        fresh = [i for i in sc.getRDDStorageInfo() if i.id() not in cached_before]
+        assert len(fresh) == 2  # the upstream cache and the checkpoint
+        assert nbytes2 == nbytes
+        assert sorted(out2.collect()) == sorted(out.collect())
+    finally:
+        up.unpersist()
+
 
 def test_prefix_doubling_layout_invariant(spark, monkeypatch):
     # the doubling rounds' OUTPUT is identical whether round layouts

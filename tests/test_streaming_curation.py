@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,9 +19,9 @@ from streaming_recommendation_spark.operators.dedup import (
 from streaming_recommendation_spark.streaming.curation import (
     curation_batch_verdicts,
     curation_ingest_batch,
-    curation_ingest_pipeline,
     read_verdicts,
 )
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 
 GOOD_A = (
     "the cat and the dog were in the house with a ball and the bird "
@@ -95,11 +96,14 @@ def test_streaming_matches_batch_twin(spark, doc_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)  # forces the 2-batch carry
         .json(doc_dir)
     )
-    q = curation_ingest_pipeline(
+    q = start_fold(
         stream,
-        index_dir=str(tmp_path / "index"),
-        verdicts_dir=str(tmp_path / "verdicts"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        partial(
+            curation_ingest_batch,
+            index_dir=str(tmp_path / "index"),
+            verdicts_dir=str(tmp_path / "verdicts"),
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 

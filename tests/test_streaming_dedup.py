@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,9 +18,9 @@ from streaming_recommendation_spark.operators.dedup import (
 )
 from streaming_recommendation_spark.streaming.dedup import (
     dedup_ingest_batch,
-    dedup_ingest_pipeline,
     read_candidates,
 )
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 
 # controlled near-dup structure: exact dup pairs within batch 0
 # (1, 2), across batches (3, 13), and within batch 1 (11, 12);
@@ -75,11 +76,14 @@ def test_streaming_matches_batch_twin(spark, doc_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)  # forces the 2-batch carry
         .json(doc_dir)
     )
-    q = dedup_ingest_pipeline(
+    q = start_fold(
         stream,
-        index_dir=str(tmp_path / "index"),
-        candidates_dir=str(tmp_path / "cands"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        partial(
+            dedup_ingest_batch,
+            index_dir=str(tmp_path / "index"),
+            candidates_dir=str(tmp_path / "cands"),
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 
@@ -122,21 +126,18 @@ def test_retry_same_batch_is_idempotent(spark, tmp_path):
 
 
 def test_restart_without_new_data_is_noop(spark, doc_dir, tmp_path):
-    kw = dict(
+    cands_dir, ckpt = str(tmp_path / "cands"), str(tmp_path / "ckpt")
+    fold = partial(
+        dedup_ingest_batch,
         index_dir=str(tmp_path / "index"),
-        candidates_dir=str(tmp_path / "cands"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        candidates_dir=cands_dir,
     )
     stream = spark.readStream.schema(DOC_SCHEMA).json(doc_dir)
-    dedup_ingest_pipeline(stream, **kw).awaitTermination(180)
-    before = sorted(
-        map(tuple, read_candidates(spark, kw["candidates_dir"]).collect())
-    )
+    start_fold(stream, fold, ckpt).awaitTermination(180)
+    before = sorted(map(tuple, read_candidates(spark, cands_dir).collect()))
     stream2 = spark.readStream.schema(DOC_SCHEMA).json(doc_dir)
-    dedup_ingest_pipeline(stream2, **kw).awaitTermination(180)
-    after = sorted(
-        map(tuple, read_candidates(spark, kw["candidates_dir"]).collect())
-    )
+    start_fold(stream2, fold, ckpt).awaitTermination(180)
+    after = sorted(map(tuple, read_candidates(spark, cands_dir).collect()))
     assert before == after
 
 

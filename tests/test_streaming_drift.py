@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,9 +20,9 @@ from streaming_recommendation_spark.operators.quality import (
 from streaming_recommendation_spark.streaming.drift import (
     drift_as_of,
     drift_ingest_batch,
-    drift_ingest_pipeline,
     merged_counts,
 )
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 
 REF_XS = [i / 10 for i in range(100)]          # uniform over the grid
 BATCH0 = [5.5] * 10 + [1.1] * 5                # skewed arrivals
@@ -59,13 +60,16 @@ def test_streaming_report_equals_batch_report(spark, val_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)  # forces the 2-batch carry
         .json(val_dir)
     )
-    q = drift_ingest_pipeline(
+    q = start_fold(
         stream,
-        counts_dir=str(tmp_path / "counts"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        lohi=lohi,
-        value_col="v",
-        nbins=10,
+        partial(
+            drift_ingest_batch,
+            counts_dir=str(tmp_path / "counts"),
+            lohi=lohi,
+            value_col="v",
+            nbins=10,
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 
@@ -157,7 +161,7 @@ def test_streaming_categorical_equals_batch_report(spark, cat_dir, tmp_path):
     )
     from streaming_recommendation_spark.streaming.drift import (
         categorical_drift_as_of,
-        categorical_ingest_pipeline,
+        categorical_ingest_batch,
     )
 
     ref = _cats(spark, CAT_REF)
@@ -166,11 +170,14 @@ def test_streaming_categorical_equals_batch_report(spark, cat_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)  # forces the 2-batch carry
         .json(cat_dir)
     )
-    q = categorical_ingest_pipeline(
+    q = start_fold(
         stream,
-        str(tmp_path / "counts"),
+        partial(
+            categorical_ingest_batch,
+            counts_dir=str(tmp_path / "counts"),
+            cat_col="event_type",
+        ),
         str(tmp_path / "ckpt"),
-        "event_type",
     )
     q.awaitTermination(120)
     got = categorical_drift_as_of(

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from streaming_recommendation_spark.operators.features import target_encode
 from streaming_recommendation_spark.streaming.encode import TargetEncodeStream
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 
 SCHEMA = "cat bigint, y int"
 
@@ -102,7 +103,7 @@ def test_streaming_query_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(d))
     )
-    q = es.pipeline(stream, str(tmp_path / "ckpt"))
+    q = start_fold(stream, es.ingest_batch, str(tmp_path / "ckpt"))
     q.awaitTermination(180)
     assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 3
     assert _enc_map(es, spark) == _reference(spark)

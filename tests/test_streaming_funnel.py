@@ -13,6 +13,7 @@ import os
 
 from streaming_recommendation_spark.operators.funnel import funnel_counts
 from streaming_recommendation_spark.streaming.funnel import FunnelStream
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 
 SCHEMA = "user_id bigint, event_id bigint, ts timestamp, event_type string"
 STAGES = ["view", "click", "purchase"]
@@ -135,7 +136,7 @@ def test_streaming_query_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(d))
     )
-    q = fs.pipeline(stream, str(tmp_path / "ckpt"))
+    q = start_fold(stream, fs.ingest_batch, str(tmp_path / "ckpt"))
     q.awaitTermination(180)
     assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 3
     assert _funnel_map(fs, spark) == _reference(spark)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,11 +22,11 @@ from streaming_recommendation_spark.streaming.hybrid import (
     hybrid_search_from_stores,
     read_doc_vectors,
     vectors_ingest_batch,
-    vectors_ingest_pipeline,
 )
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 from streaming_recommendation_spark.streaming.postings import (
     postings_batch,
-    postings_ingest_pipeline,
+    postings_ingest_batch,
 )
 
 BATCH0 = [(0, "x y fox"), (1, "x y z fox den"), (2, "x a b den")]
@@ -115,20 +116,16 @@ def test_rrf_fuse_absent_leg_hand_computed(spark):
 
 
 def test_streaming_stores_hybrid_equals_batch_hybrid(spark, doc_dir, tmp_path):
-    for sub, pipeline in (
-        ("postings", postings_ingest_pipeline),
-        ("vectors", vectors_ingest_pipeline),
+    for sub, fold in (
+        ("postings", partial(postings_ingest_batch, postings_dir=str(tmp_path / "postings"))),
+        ("vectors", partial(vectors_ingest_batch, vectors_dir=str(tmp_path / "vectors"))),
     ):
         stream = (
             spark.readStream.schema(DOC_SCHEMA)
             .option("maxFilesPerTrigger", 1)  # forces the 2-batch carry
             .json(doc_dir)
         )
-        q = pipeline(
-            stream,
-            str(tmp_path / sub),
-            checkpoint_dir=str(tmp_path / f"ckpt_{sub}"),
-        )
+        q = start_fold(stream, fold, str(tmp_path / f"ckpt_{sub}"))
         q.awaitTermination(180)
 
     vec = read_doc_vectors(spark, str(tmp_path / "vectors"))

@@ -20,6 +20,7 @@ from streaming_recommendation_spark.operators.itemcf import (
     item_similarity,
 )
 from streaming_recommendation_spark.streaming.itemcf import ItemCfStream
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 
 SCHEMA = "user_id bigint, item_id bigint, ts bigint"
 
@@ -180,7 +181,7 @@ def test_streaming_query_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(d))
     )
-    q = cf.pipeline(stream, str(tmp_path / "ckpt"))
+    q = start_fold(stream, cf.ingest_batch, str(tmp_path / "ckpt"))
     q.awaitTermination(180)
     assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 3
     got = {

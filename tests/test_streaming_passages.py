@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,9 +16,9 @@ from streaming_recommendation_spark.operators.curation import passage_dedup
 from streaming_recommendation_spark.streaming.passages import (
     passage_batch_manifest,
     passage_ingest_batch,
-    passage_ingest_pipeline,
     read_manifests,
 )
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 
 P1 = "w1 w2 w3 w4"
 P2 = "v1 v2 v3 v4"
@@ -91,13 +92,16 @@ def test_streaming_matches_batch_twin(spark, doc_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)  # forces the 2-batch carry
         .json(doc_dir)
     )
-    q = passage_ingest_pipeline(
+    q = start_fold(
         stream,
-        index_dir=str(tmp_path / "index"),
-        manifest_dir=str(tmp_path / "manifests"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        window=4,
-        stride=4,
+        partial(
+            passage_ingest_batch,
+            index_dir=str(tmp_path / "index"),
+            manifest_dir=str(tmp_path / "manifests"),
+            window=4,
+            stride=4,
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,10 +17,10 @@ from streaming_recommendation_spark.operators.text import (
     best_passage,
     best_passage_from_positions,
 )
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 from streaming_recommendation_spark.streaming.postings import (
     best_passage_query,
     positional_ingest_batch,
-    positional_ingest_pipeline,
     positional_postings_batch,
     postings_batch,
     read_positional_postings,
@@ -102,10 +103,10 @@ def test_streaming_store_serves_best_passage(spark, doc_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)  # forces the 2-batch carry
         .json(doc_dir)
     )
-    q = positional_ingest_pipeline(
+    q = start_fold(
         stream,
-        postings_dir=str(tmp_path / "pos"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        partial(positional_ingest_batch, postings_dir=str(tmp_path / "pos")),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,9 +21,9 @@ from streaming_recommendation_spark.streaming.postings import (
     bm25_query,
     postings_batch,
     postings_ingest_batch,
-    postings_ingest_pipeline,
     read_postings,
 )
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 
 BATCH0 = [(0, "x y"), (1, "x y z"), (2, "x a b")]
 BATCH1 = [(3, "a b c"), (4, "y y y y"), (5, "x z z")]
@@ -67,10 +68,10 @@ def test_streaming_index_search_equals_batch_search(spark, doc_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)  # forces the 2-batch carry
         .json(doc_dir)
     )
-    q = postings_ingest_pipeline(
+    q = start_fold(
         stream,
-        postings_dir=str(tmp_path / "postings"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        partial(postings_ingest_batch, postings_dir=str(tmp_path / "postings")),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 

@@ -6,6 +6,8 @@ silently re-training an incompatible quantizer."""
 
 from __future__ import annotations
 
+from functools import partial
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,6 +17,7 @@ from streaming_recommendation_spark.operators.similarity import (
     pq_train,
 )
 from streaming_recommendation_spark.sources.testdata import load_table
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 from streaming_recommendation_spark.streaming.pqcodes import (
     adc_query,
     load_books,
@@ -100,14 +103,11 @@ def test_read_codes_wrong_id_col_fails_fast(spark, emb, books, tmp_path):
 
 
 def test_real_foreachbatch_pipeline(spark, tmp_path):
-    """The actual streaming query (pq_ingest_pipeline over a 2-file
-    source) accumulates the same codes as the direct batch calls."""
+    """The actual streaming query (pq_ingest_batch folded over a
+    2-file source) accumulates the same codes as the direct batch
+    calls."""
     import json as _json
     import os as _os
-
-    from streaming_recommendation_spark.streaming.pqcodes import (
-        pq_ingest_pipeline,
-    )
 
     vecs0 = [(i, [float((i * 7 + j) % 5) for j in range(8)]) for i in range(6)]
     vecs1 = [(i, [float((i * 3 + j) % 5) for j in range(8)]) for i in range(6, 12)]
@@ -135,12 +135,15 @@ def test_real_foreachbatch_pipeline(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)  # forces the 2-batch carry
         .json(str(d))
     )
-    q = pq_ingest_pipeline(
+    q = start_fold(
         stream,
-        codes_dir=str(tmp_path / "codes"),
-        books_path=bpath,
-        dim=8,
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        partial(
+            pq_ingest_batch,
+            codes_dir=str(tmp_path / "codes"),
+            books=load_books(bpath),
+            dim=8,
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,8 +20,8 @@ from streaming_recommendation_spark.streaming.curation import (
     read_salvage_manifests,
     salvage_batch_manifest,
     salvage_ingest_batch,
-    salvage_ingest_pipeline,
 )
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 
 # 16-word window shared between two ADMITTED docs (doc 2 -> doc 11):
 # the passage-salvage case — 11 survives the doc gate (tails differ,
@@ -130,12 +131,15 @@ def test_streaming_matches_batch_twin(spark, doc_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)  # forces the 2-batch carry
         .json(doc_dir)
     )
-    q = salvage_ingest_pipeline(
+    q = start_fold(
         stream,
-        sig_index_dir=str(tmp_path / "sigs"),
-        passage_index_dir=str(tmp_path / "phashes"),
-        manifest_dir=str(tmp_path / "manifests"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
+        partial(
+            salvage_ingest_batch,
+            sig_index_dir=str(tmp_path / "sigs"),
+            passage_index_dir=str(tmp_path / "phashes"),
+            manifest_dir=str(tmp_path / "manifests"),
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
 

@@ -16,6 +16,7 @@ from streaming_recommendation_spark.operators.scd2 import (
     scd2_finalize,
     scd2_intervals,
 )
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 from streaming_recommendation_spark.streaming.scd2 import Scd2Stream
 
 SCHEMA = "user_id bigint, event_type string, ts bigint, event_id bigint"
@@ -103,7 +104,7 @@ def test_streaming_query_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(d))
     )
-    q = dim.pipeline(stream, str(tmp_path / "ckpt"))
+    q = start_fold(stream, dim.ingest_batch, str(tmp_path / "ckpt"))
     q.awaitTermination(180)
     assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 3
     got = sorted(

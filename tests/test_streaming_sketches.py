@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,12 +15,12 @@ from streaming_recommendation_spark.operators.sketch import (
     cms_counts,
     hll_distinct,
 )
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 from streaming_recommendation_spark.streaming.sketches import (
     CmsStreamSketch,
     HllStreamSketch,
     read_sketch_state,
     sketch_ingest_batch,
-    sketch_stream_pipeline,
 )
 
 EV_SCHEMA = "event_type string, user_id bigint"
@@ -58,8 +59,10 @@ def test_hll_stream_matches_single_pass(spark, event_files, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(event_files)
     )
-    q = sketch_stream_pipeline(
-        stream, sketch, str(tmp_path / "state"), str(tmp_path / "ckpt")
+    q = start_fold(
+        stream,
+        partial(sketch_ingest_batch, sketch=sketch, state_dir=str(tmp_path / "state")),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(180)
     # a real multi-batch carry happened

@@ -11,10 +11,11 @@ identically through a base."""
 
 from __future__ import annotations
 
-import pytest
-
+import json
 import os
+from functools import partial
 
+import pytest
 from pyspark.sql import functions as F
 
 from streaming_recommendation_spark.streaming import store
@@ -35,6 +36,7 @@ from streaming_recommendation_spark.streaming.passages import (
     read_manifests,
     read_passage_index,
 )
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 from streaming_recommendation_spark.streaming.postings import (
     compact_positional,
     compact_postings,
@@ -50,6 +52,25 @@ B1 = [(3, "a b c fox fox"), (4, "y y y y den"), (5, "x z z c")]
 # batch 2 re-ingests docs 0 and 3 with NEW text (the upsert case the
 # append-only delta layout defers to compaction)
 B2 = [(0, "fresh words only"), (3, "den den den")]
+
+
+def _doc_stream(spark, ddir, batches):
+    """A file stream over ``batches``, one JSON file per micro-batch
+    (mtimes ascending, maxFilesPerTrigger=1)."""
+    ddir.mkdir()
+    for i, batch in enumerate(batches):
+        p = ddir / f"b{i}.jsonl"
+        p.write_text(
+            "\n".join(json.dumps({"doc_id": d, "text": t}) for d, t in batch)
+            + "\n"
+        )
+        now = p.stat().st_mtime
+        os.utime(p, (now - 300 + i * 100, now - 300 + i * 100))
+    return (
+        spark.readStream.schema(DOC_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .json(str(ddir))
+    )
 
 
 def _pfiles(d):
@@ -343,34 +364,14 @@ def test_instream_compaction_during_live_pipeline(spark, tmp_path):
     commits a base mid-run WITHOUT folding the then-newest delta, the
     final read equals the plain uncompacted run, and the folded delta
     partitions are gone."""
-    import json as _json
-
-    from streaming_recommendation_spark.streaming.postings import (
-        postings_ingest_pipeline,
-    )
-
-    ddir = tmp_path / "docs"
-    ddir.mkdir()
     batches = [B0, B1, B2]
-    for i, batch in enumerate(batches):
-        p = ddir / f"b{i}.jsonl"
-        p.write_text(
-            "\n".join(_json.dumps({"doc_id": d, "text": t}) for d, t in batch)
-            + "\n"
-        )
-        now = p.stat().st_mtime
-        os.utime(p, (now - 300 + i * 100, now - 300 + i * 100))
-    stream = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(ddir))
-    )
+    stream = _doc_stream(spark, tmp_path / "docs", batches)
     pdir, bdir = str(tmp_path / "post"), str(tmp_path / "postb")
-    q = postings_ingest_pipeline(
+    q = start_fold(
         stream,
-        pdir,
+        partial(postings_ingest_batch, postings_dir=pdir),
         str(tmp_path / "ckpt"),
-        base_dir=bdir,
+        compact=partial(compact_postings, postings_dir=pdir, base_dir=bdir),
         compact_every=2,
     )
     q.awaitTermination(120)
@@ -404,18 +405,32 @@ def test_instream_compaction_during_live_pipeline(spark, tmp_path):
     assert got == want
 
 
-def test_compact_every_requires_base_dir(spark, tmp_path):
-    import pytest as _pytest
+def test_start_fold_contract(spark, tmp_path):
+    """The fold driver every streaming leg runs on: over a 4-file
+    stream (one file per micro-batch) the fold runs exactly once per
+    batch, in order, and with compact_every=2 the compaction runs
+    right after batch 2's fold only — never after batch 0, whose
+    "every Nth" slot holds nothing to fold."""
+    events = []
 
-    from streaming_recommendation_spark.streaming.postings import (
-        postings_ingest_pipeline,
-    )
+    def fold(batch_df, batch_id):
+        events.append(("fold", batch_id, batch_df.count()))
 
-    stream = spark.readStream.schema(DOC_SCHEMA).json(str(tmp_path))
-    with _pytest.raises(ValueError, match="requires base_dir"):
-        postings_ingest_pipeline(
-            stream, str(tmp_path / "p"), str(tmp_path / "c"), compact_every=2
-        )
+    def compact(sess):
+        events.append(("compact",))
+
+    stream = _doc_stream(spark, tmp_path / "docs", [B0, B1, B2, B0])
+    q = start_fold(stream, fold, str(tmp_path / "ckpt"), compact, compact_every=2)
+    q.awaitTermination(120)
+    assert events == [
+        ("fold", 0, 3),
+        ("fold", 1, 3),
+        ("fold", 2, 2),
+        ("compact",),
+        ("fold", 3, 3),
+    ]
+    with pytest.raises(ValueError, match="compact_every requires compact"):
+        start_fold(stream, fold, str(tmp_path / "ckpt2"), compact_every=2)
 
 
 def test_erasure_only_compaction_rewrites_base(spark, tmp_path):

@@ -13,6 +13,7 @@ import os
 from pyspark.sql import functions as F
 
 from streaming_recommendation_spark.operators.timeseries import gap_fill_locf
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 from streaming_recommendation_spark.streaming.timeseries import TimeBucketStream
 
 SCHEMA = "user_id bigint, ts timestamp, value double"
@@ -122,7 +123,7 @@ def test_streaming_query_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(d))
     )
-    q = ts.pipeline(stream, str(tmp_path / "ckpt"))
+    q = start_fold(stream, ts.ingest_batch, str(tmp_path / "ckpt"))
     q.awaitTermination(180)
     assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 3
     got = {

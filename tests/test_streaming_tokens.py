@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+from functools import partial
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +19,7 @@ from streaming_recommendation_spark.operators.bpe import (
     learn_bpe,
 )
 from streaming_recommendation_spark.operators.curation import pack_sequences
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 from streaming_recommendation_spark.streaming.tokens import (
     compact_token_stats,
     load_merges,
@@ -26,7 +28,6 @@ from streaming_recommendation_spark.streaming.tokens import (
     save_merges,
     token_stats_batch,
     tokens_ingest_batch,
-    tokens_ingest_pipeline,
 )
 
 DOCS = [
@@ -116,8 +117,14 @@ def test_real_foreachbatch_pipeline(spark, docs, merges, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(ddir))
     )
-    q = tokens_ingest_pipeline(
-        stream, str(tmp_path / "stats"), mpath, str(tmp_path / "ckpt")
+    q = start_fold(
+        stream,
+        partial(
+            tokens_ingest_batch,
+            stats_dir=str(tmp_path / "stats"),
+            merges=load_merges(mpath),
+        ),
+        str(tmp_path / "ckpt"),
     )
     q.awaitTermination(120)
     stats = read_token_stats(spark, str(tmp_path / "stats"))
@@ -131,15 +138,9 @@ def test_real_foreachbatch_pipeline(spark, docs, merges, tmp_path):
     )
 
 
-def test_missing_merges_raises(spark, tmp_path):
-    stream = spark.readStream.schema(DOC_SCHEMA).json(str(tmp_path))
+def test_missing_merges_raises(tmp_path):
     with pytest.raises(FileNotFoundError, match="learn the\n?.*offline"):
-        tokens_ingest_pipeline(
-            stream,
-            str(tmp_path / "stats"),
-            str(tmp_path / "nope.json"),
-            str(tmp_path / "ckpt"),
-        )
+        load_merges(str(tmp_path / "nope.json"))
 
 
 def test_compaction_roundtrip_with_upsert(spark, docs, merges, tmp_path):

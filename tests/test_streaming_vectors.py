@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from streaming_recommendation_spark.operators.similarity import ivf_knn
+from streaming_recommendation_spark.streaming.pipeline import start_fold
 from streaming_recommendation_spark.streaming.vectors import VectorIndexStream
 
 
@@ -76,7 +77,7 @@ def test_streaming_query_end_to_end(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(d))
     )
-    q = vix.pipeline(stream, str(tmp_path / "ckpt"))
+    q = start_fold(stream, vix.ingest_batch, str(tmp_path / "ckpt"))
     q.awaitTermination(180)
     assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 2
 
@@ -255,7 +256,7 @@ def test_compact_is_rerunnable_and_incremental(spark, tmp_path):
 
 
 def test_pipeline_with_periodic_compaction(spark, tmp_path):
-    """compact_every runs the compaction job in-stream: after the run
+    """start_fold's compact_every runs the compaction job in-stream: after the run
     the index is base + a newest-delta tail (never fully folded while
     live), answers unchanged vs the single-pass build."""
     import json
@@ -283,7 +284,9 @@ def test_pipeline_with_periodic_compaction(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(d))
     )
-    q = vix.pipeline(stream, str(tmp_path / "ckpt"), compact_every=1)
+    q = start_fold(
+        stream, vix.ingest_batch, str(tmp_path / "ckpt"), vix.compact, compact_every=1
+    )
     q.awaitTermination(180)
 
     import streaming_recommendation_spark.streaming.state as state
