@@ -15,7 +15,7 @@ Layout:
                   history windows, sampling, dedup, similarity, text)
     queries.py    named query registry: Spark callable + DuckDB oracle SQL
     streaming/    Structured Streaming pipeline + keyed sinks
-    cascade/      the 3-stage recommendation cascade as a DataFrame plan
+    cascade/      the 3-stage recommendation cascade (one numpy kernel)
 """
 
 __version__ = "0.1.0"

@@ -13,43 +13,38 @@ Reference dataflow (SURVEY §2.9 M1-M5):
   chain   — k: recall 100 -> rank 50 -> rerank 20 -> final 10
             (model_service/models.py:198-210; inference.py:78-106)
 
-Two plan shapes, one output contract:
+One implementation, two feeders. ``cascade_kernel`` computes the
+whole cascade for a block of users in numpy (mean-pool -> recall ->
+exclude -> rank -> rerank; only the k_final survivors leave the
+task). Spark distributes, numpy does the bulk math (guide §4.2/§8.3).
 
-  * fused (default scorers, brute recall) — ONE numpy kernel
-    (cascade_kernel: mean-pool -> recall -> exclude -> rank ->
-    rerank for a block of users; only the k_final survivors leave
-    the task) with two feeders. ``recommend``'s is an Arrow cogroup
-    (_fused_brute_cascade): users and their history rows, a separate
-    frame, hash into shards and the item matrix replicates per shard.
-    streaming.scoring.score_batch's is a narrow per-partition pass:
-    each profile row carries its own history, so nothing shuffles
-    and the item side ships from the driver. Spark distributes,
-    numpy does the bulk math (guide §4.2/§8.3).
-  * DataFrame plan (custom scorer Columns, "brute_jvm", "lsh") —
-    every stage is a DataFrame stage; per-user top-k is a
-    rank-filtered window (WindowGroupLimit — per-partition k-heaps);
-    the item side is broadcast and reused by every stage. Scorers
-    are pluggable Column-builders; a torch-backed
-    ``predict_batch_udf`` drops into the same slots when model
-    weights and torch are available (not in this container —
-    import-gated).
+  * ``recommend`` feeds it through an Arrow cogroup
+    (_cogroup_cascade): users, their history rows and, for
+    ``recall_strategy="lsh"``, their recalled candidates
+    (``operators.similarity.lsh_knn``) hash into user shards, and the
+    item matrix replicates per shard.
+  * ``streaming.scoring.score_batch`` feeds it through a narrow
+    per-partition pass: each profile row carries its own history, so
+    nothing shuffles and the item side ships from the driver.
 
-The default scorers are deterministic embedding math (dot / cosine).
-The reference's model_service stubs DIN/RankNet with ``random``
-scores (models.py:126-130,171-175); ours are DETERMINISTIC
-(documented divergence, required for testability).
+Recall is the reference's LightGCN dot product over every item
+("brute"), or SRP-LSH bucketed candidates ranked by cosine ("lsh").
+Rank and rerank default to deterministic cosine stubs; a numpy
+callable over row pairs replaces either (``cascade.scorers``: a numpy
+MLP, or a torch module where torch is installed). The reference's
+model_service stubs DIN/RankNet with ``random`` scores
+(models.py:126-130,171-175); ours are DETERMINISTIC (documented
+divergence, required for testability).
+The kernel is bit-identical to a stage-per-DataFrame reference plan,
+tests/cascade_reference.py, which the tests compare against.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.vectors import cosine_similarity, dot
-from ..operators.similarity import mean_pool_grouped
-from ..operators.topk import top_k_per_group
 
 
 @dataclass
@@ -61,25 +56,6 @@ class CascadeConfig:
     # vector width, required by recall_strategy="lsh" (hyperplanes are
     # plan-time literals; see operators.similarity._require_dim)
     lsh_dim: int | None = None
-
-
-def _default_recall_score() -> Column:
-    """M1 stub: dot(user_vec, item_vec) — exactly the reference's
-    LightGCN scoring (a matmul row)."""
-    return dot("user_vec", "item_vec")
-
-
-def _default_rank_score() -> Column:
-    """M3 stub: cosine(candidate, mean-pooled history embedding) —
-    a deterministic stand-in with DIN's signature (candidate scored
-    against the user's history)."""
-    return cosine_similarity("item_vec", "history_vec")
-
-
-def _default_rerank_score() -> Column:
-    """M4 stub: cosine(user_vec, item_vec) — RankNet's signature
-    (user feature x item feature)."""
-    return cosine_similarity("user_vec", "item_vec")
 
 
 def _fold(a, b):
@@ -109,13 +85,23 @@ def item_side(items):
     return item_ids, Vt, np.sqrt(_fold(Vt, Vt))
 
 
-def cascade_kernel(user_ids, user_vecs, hist_users, hist_items, items, cfg):
-    """The whole default-scorer cascade for a block of users, in numpy.
+def cascade_kernel(
+    user_ids,
+    user_vecs,
+    hist_users,
+    hist_items,
+    items,
+    cfg,
+    candidates=None,
+    rank_score=None,
+    rerank_score=None,
+):
+    """The whole cascade for a block of users, in numpy.
 
-    Per user: history mean-pool, dot-product recall top k_recall,
-    history exclusion, cosine(item, history) rank cut to
+    Per user: history mean-pool, dot-product recall top k_recall (or
+    the given candidates), history exclusion, rank cut to
     min(k_rank, k_rerank) (two cuts on one ordering are one cut), and
-    cosine(user, item) rerank top k_final.
+    rerank top k_final.
 
     user_ids:   the distinct users of the block
     user_vecs:  their vectors, or None: the user vector IS the history
@@ -126,13 +112,23 @@ def cascade_kernel(user_ids, user_vecs, hist_users, hist_items, items, cfg):
                 not a user of the block), in history order
     hist_items: each history entry's item_id; ids not in ``items`` drop
     items:      ``item_side(...)``
+    candidates: None: recall scores every item. Or (user positions,
+                item_ids), shaped like the history pair: each user's
+                recalled items, distinct per user, in any order and
+                any number (lsh_knn's output). Ids not in ``items``
+                drop, and a user with no candidate gets nothing.
+    rank_score, rerank_score:
+                None: the cosine stubs below. Or ``f(a, b) -> scores``
+                over (n, dim) arrays of row pairs: (candidate item,
+                history mean) for rank, (user, item) for rerank.
 
     Returns (user position, item_id, rank) arrays, rank 1..k_final,
     grouped by user in ascending position and in rank order within a
     user.
 
-    Bit-parity with the DataFrame plan (pinned by tests/
-    test_cascade.py::test_fused_cascade_matches_jvm*):
+    Bit-parity with the DataFrame reference plan
+    (tests/cascade_reference.py; pinned by tests/test_cascade.py::
+    test_fused_cascade_matches_jvm*):
       * products in the source dtype (float32 x float32 stays
         float32, as Catalyst's zip_with does), each widened into a
         float64 accumulator left to right — dot() and l2_norm()'s
@@ -154,17 +150,23 @@ def cascade_kernel(user_ids, user_vecs, hist_users, hist_items, items, cfg):
     empty = (np.zeros(0, np.int64), item_ids[:0], np.zeros(0, np.int32))
     if len(user_ids) == 0 or n_items == 0:
         return empty
-    k_recall, k_final = cfg.k_recall, cfg.k_final
     k_short = min(cfg.k_rank, cfg.k_rerank)
+    item_index = pd.Index(item_ids)
 
     def cosine(num, denom):
         out = np.zeros_like(num)
         np.divide(num, denom, out=out, where=denom > 0)
         return out
 
+    def pairs(f, a, b):
+        # f over the row pairs of two (dim, users, candidates) operands
+        a, b = np.broadcast_arrays(a, b)
+        scores = f(a.reshape(dim, -1).T, b.reshape(dim, -1).T)
+        return np.asarray(scores, np.float64).reshape(a.shape[1:])
+
     # history mean-pool, in history order
     hu = hist_users
-    hi = pd.Index(item_ids).get_indexer(hist_items)
+    hi = item_index.get_indexer(hist_items)
     known = (hu >= 0) & (hi >= 0)
     hu, hi = hu[known], hi[known]
     hsum = np.zeros((len(user_ids), dim))
@@ -183,6 +185,25 @@ def cascade_kernel(user_ids, user_vecs, hist_users, hist_items, items, cfg):
     n_user = np.sqrt(_fold(Ut, Ut))
     seen = np.unique(hu.astype(np.int64) * n_items + hi)
 
+    if candidates is None:
+        k = min(cfg.k_recall, n_items)
+    else:
+        # one row per user: C holds item positions, ``filled`` marks
+        # the slots that hold a candidate
+        cu, ci = candidates[0], item_index.get_indexer(candidates[1])
+        keep = (cu >= 0) & (ci >= 0)
+        order = np.argsort(cu[keep], kind="stable")
+        cu, ci = cu[keep][order], ci[keep][order]
+        n_cand = np.bincount(cu, minlength=len(user_ids))
+        k = int(n_cand.max(initial=0))
+        if k == 0:
+            return empty
+        slot = np.arange(len(cu)) - np.repeat(np.cumsum(n_cand) - n_cand, n_cand)
+        C = np.zeros((len(user_ids), k), np.intp)
+        filled = np.zeros(C.shape, bool)
+        C[cu, slot] = ci
+        filled[cu, slot] = True
+
     def top(keys, cand, valid, k):
         # (valid first, score desc, item_id asc); lexsort's LAST key
         # is primary and every pass is stable
@@ -193,48 +214,66 @@ def cascade_kernel(user_ids, user_vecs, hist_users, hist_items, items, cfg):
         )
 
     out = [empty]
-    k = min(k_recall, n_items)
     # bound the per-chunk score and candidate-vector arrays
     step = max(1, (1 << 20) // max(n_items, k * dim))
     for lo in range(0, len(live), step):
         r = live[lo : lo + step]
-        # M1 recall: dot(user, item) over every item, top k_recall
-        scores = _fold(Ut[:, r, None], Vt[:, None, :])
-        cand = np.argsort(-scores, axis=-1, kind="stable")[:, :k]
+        if candidates is None:
+            # M1 recall: dot(user, item) over every item, top k_recall
+            scores = _fold(Ut[:, r, None], Vt[:, None, :])
+            cand = np.argsort(-scores, axis=-1, kind="stable")[:, :k]
+            valid = True
+        else:
+            cand, valid = C[r], filled[r]
         # J6: history exclusion
-        valid = ~np.isin(r[:, None].astype(np.int64) * n_items + cand, seen)
-        # M3 rank: cosine(item, history mean), cut to min(k_rank, k_rerank)
-        rank_s = cosine(
-            _fold(Vt[:, cand], Ht[:, r, None]),
-            n_item[cand] * n_hist[r, None],
-        )
+        valid = valid & ~np.isin(r[:, None].astype(np.int64) * n_items + cand, seen)
+        # M3 rank (stub: cosine(item, history mean)), cut to
+        # min(k_rank, k_rerank)
+        if rank_score is None:
+            rank_s = cosine(
+                _fold(Vt[:, cand], Ht[:, r, None]),
+                n_item[cand] * n_hist[r, None],
+            )
+        else:
+            rank_s = pairs(rank_score, Vt[:, cand], Ht[:, r, None])
         cand, valid = top(rank_s, cand, valid, k_short)
-        # M4 rerank: cosine(user, item), top k_final
-        rerank_s = cosine(
-            _fold(Ut[:, r, None], Vt[:, cand]),
-            n_user[r, None] * n_item[cand],
-        )
-        cand, valid = top(rerank_s, cand, valid, k_final)
+        # M4 rerank (stub: cosine(user, item)), top k_final
+        if rerank_score is None:
+            rerank_s = cosine(
+                _fold(Ut[:, r, None], Vt[:, cand]),
+                n_user[r, None] * n_item[cand],
+            )
+        else:
+            rerank_s = pairs(rerank_score, Ut[:, r, None], Vt[:, cand])
+        cand, valid = top(rerank_s, cand, valid, cfg.k_final)
         rows, cols = np.nonzero(valid)
         out.append((r[rows], item_ids[cand[rows, cols]], (cols + 1).astype(np.int32)))
     return tuple(np.concatenate(parts) for parts in zip(*out))
 
 
-def _fused_brute_cascade(
-    users: DataFrame, items: DataFrame, history: DataFrame, cfg: CascadeConfig
+def _cogroup_cascade(
+    users: DataFrame,
+    items: DataFrame,
+    history: DataFrame,
+    cfg: CascadeConfig,
+    candidates: DataFrame | None = None,
+    rank_score=None,
+    rerank_score=None,
 ) -> DataFrame:
-    """The whole default-scorer cascade (``cascade_kernel``) in one
-    cogroup pass. Emits (user_id, item_id, rank), rank 1..k_final.
+    """``cascade_kernel`` in one cogroup pass. Emits (user_id, item_id,
+    rank), rank 1..k_final. ``candidates``: None (dense recall) or the
+    (user_id, item_id) rows of each user's recalled items.
 
     History order is the rows' order in ``history`` (partition, then
     row), carried as a monotonically-increasing id across the shuffle.
 
-    Plan shape: users and history rows (one union) hash into
-    ``spark.sql.shuffle.partitions`` shards by xxhash64(user_id); the
-    item side replicates per shard by explode (no join) — the "item
-    matrix on every worker" contract of a broadcast. Two exchanges,
-    no construction-time jobs, and no per-pair score row ever leaves
-    the task.
+    Plan shape: user, history and candidate rows (one union, told apart
+    by ``__kind``) hash into ``spark.sql.shuffle.partitions`` shards by
+    xxhash64(user_id); the item side replicates per shard by explode
+    (no join) — the "item matrix on every worker" contract of a
+    broadcast. Two exchanges beyond the candidates' own plan, no
+    construction-time jobs, and no per-pair score row ever leaves the
+    task.
     """
     import pandas as pd  # noqa: F401 (applyInPandas contract)
     from pyspark.sql.types import IntegerType, StructField, StructType
@@ -242,6 +281,7 @@ def _fused_brute_cascade(
     spark = users.sparkSession
     shards = int(spark.conf.get("spark.sql.shuffle.partitions"))
     has_vec = "user_vec" in users.columns
+    has_cands = candidates is not None
     user_type = users.schema["user_id"].dataType
     item_type = items.schema["item_id"].dataType
     out_schema = StructType(
@@ -256,41 +296,51 @@ def _fused_brute_cascade(
         import numpy as np
         import pandas as pd
 
-        is_hist = left["__hist"].to_numpy(bool)
-        users_df = left[~is_hist].drop_duplicates("user_id")
-        hist = left[is_hist].sort_values("__seq", kind="stable")
+        kind = left["__kind"].to_numpy()
+        users_df = left[kind == 0].drop_duplicates("user_id")
+        hist = left[kind == 1].sort_values("__seq", kind="stable")
+        cand = left[kind == 2]
         user_ids = users_df["user_id"].to_numpy()
+        position = pd.Index(user_ids).get_indexer
         u, item_id, rank = cascade_kernel(
             user_ids,
             np.stack(users_df["user_vec"].to_numpy()) if has_vec and len(users_df) else None,
-            pd.Index(user_ids).get_indexer(hist["user_id"]),
+            position(hist["user_id"]),
             hist["item_id"].to_numpy(),
             item_side(right),
             cfg,
+            (position(cand["user_id"]), cand["item_id"].to_numpy()) if has_cands else None,
+            rank_score,
+            rerank_score,
         )
         return pd.DataFrame({"user_id": user_ids[u], "item_id": item_id, "rank": rank})
 
-    # user rows and history rows share one frame (cogroup takes two
-    # sides); placeholders are non-null so Arrow keeps integer ids exact
+    # user, history and candidate rows share one frame (cogroup takes
+    # two sides); placeholders are non-null so Arrow keeps integer ids
+    # exact
     vec, no_vec = [], []
     if has_vec:
         vec = [F.col("user_vec")]
         no_vec = [F.lit(None).cast(users.schema["user_vec"].dataType).alias("user_vec")]
+
+    def tagged(df, kind, seq):
+        return df.where(F.col("item_id").isNotNull()).select(
+            F.col("user_id").cast(user_type).alias("user_id"),
+            *no_vec,
+            F.col("item_id").cast(item_type).alias("item_id"),
+            seq.alias("__seq"),
+            F.lit(kind).alias("__kind"),
+        )
+
     left = users.select(
         "user_id",
         *vec,
         F.lit(0).cast(item_type).alias("item_id"),
         F.lit(0).cast("long").alias("__seq"),
-        F.lit(False).alias("__hist"),
-    ).unionByName(
-        history.where(F.col("item_id").isNotNull()).select(
-            F.col("user_id").cast(user_type).alias("user_id"),
-            *no_vec,
-            F.col("item_id").cast(item_type).alias("item_id"),
-            F.monotonically_increasing_id().alias("__seq"),
-            F.lit(True).alias("__hist"),
-        )
-    )
+        F.lit(0).alias("__kind"),
+    ).unionByName(tagged(history, 1, F.monotonically_increasing_id()))
+    if has_cands:
+        left = left.unionByName(tagged(candidates, 2, F.lit(0).cast("long")))
     it = items.select(
         "item_id",
         "item_vec",
@@ -311,9 +361,8 @@ def recommend(
     items: DataFrame,
     history: DataFrame,
     config: CascadeConfig | None = None,
-    recall_score: Column | None = None,
-    rank_score: Column | None = None,
-    rerank_score: Column | None = None,
+    rank_score=None,
+    rerank_score=None,
     recall_strategy: str = "brute",
 ) -> DataFrame:
     """Run the cascade for every user in `users`.
@@ -326,44 +375,31 @@ def recommend(
     items:   (item_id, item_vec), one row per item
     history: (user_id, item_id) — already-seen pairs to exclude (J6)
              and the rows the history mean-pool averages
+    rank_score, rerank_score:
+             None (the cosine stubs) or a numpy callable
+             ``f(a, b) -> scores`` over row pairs (``cascade_kernel``;
+             ``cascade.scorers`` builds model-backed ones)
+    recall_strategy:
+             "brute" — dot(user, item) over every item, top k_recall
+             (exact). "lsh" — SRP-LSH bucketed candidates
+             (``operators.similarity.lsh_knn``, top k_recall by cosine
+             per user; needs ``user_vec`` and ``config.lsh_dim``): at
+             100 TB the item corpus is too large to score densely, and
+             each table's buckets prune ~1/2^P of it.
 
-    Returns (user_id, item_id, rank) with rank 1..k_final.
-
-    With the three default scorers and ``recall_strategy="brute"`` the
-    whole cascade runs as one Arrow cogroup pass over
-    ``cascade_kernel`` (``_fused_brute_cascade``, bit-identical to the
-    DataFrame plan).
-    A custom scorer Column, ``"brute_jvm"`` or ``"lsh"`` runs the
-    DataFrame plan: items broadcast to every stage; the candidate set
-    shrinks 100 -> 50 -> 20 -> 10 per user, so later stages are
-    narrow; one shuffle per top-k window, all on user_id.
+    Returns (user_id, item_id, rank) with rank 1..k_final, computed by
+    ``cascade_kernel`` in one Arrow cogroup pass.
     """
     cfg = config or CascadeConfig()
-    scorers = (recall_score, rank_score, rerank_score)
-    if recall_strategy == "brute" and all(s is None for s in scorers):
-        return _fused_brute_cascade(users, items, history, cfg)
-
-    # History mean-pool for the rank stub (A7): mean of history item
-    # vectors per user; users with no history get a zero vector.
-    hist_vecs = mean_pool_grouped(
-        history.join(F.broadcast(items), "item_id"), "user_id", "item_vec"
-    ).withColumnRenamed("mean_vec", "history_vec")
-    if "user_vec" not in users.columns:
-        users = hist_vecs.join(users.select("user_id"), "user_id", "left_semi").select(
-            "user_id", F.col("history_vec").alias("user_vec")
-        )
-
-    # M1 recall. recall_strategy:
-    #   "brute" — score every (user, item) pair (exact); a custom
-    #             recall_score Column runs in-plan over the crossJoin.
-    #   "brute_jvm" — the crossJoin+window reference shape.
-    #   "lsh"   — SRP-LSH bucketed approximate recall: at 100 TB the
-    #             item corpus is too large to score densely; buckets
-    #             prune ~1/2^P per table (same output contract)
+    if recall_strategy not in ("brute", "lsh"):
+        raise ValueError(f"recall_strategy must be 'brute' or 'lsh', got {recall_strategy!r}")
+    candidates = None
     if recall_strategy == "lsh":
+        if "user_vec" not in users.columns:
+            raise ValueError('recall_strategy="lsh" needs users.user_vec')
         from ..operators.similarity import lsh_knn
 
-        recalled = lsh_knn(
+        candidates = lsh_knn(
             items,
             users.select("user_id", F.col("user_vec").alias("item_vec")),
             k=cfg.k_recall,
@@ -372,74 +408,4 @@ def recommend(
             vec_col="item_vec",
             query_id_col="user_id",
         ).select("user_id", F.col("neighbor_id").alias("item_id"))
-    else:
-        scored = users.crossJoin(F.broadcast(items)).select(
-            "user_id",
-            "item_id",
-            (
-                recall_score if recall_score is not None else _default_recall_score()
-            ).alias("recall_score"),
-        )
-        recalled = top_k_per_group(
-            scored,
-            cfg.k_recall,
-            ["user_id"],
-            F.col("recall_score").desc(),
-            F.col("item_id").asc(),
-        )
-
-    # J6: drop items the user has already interacted with.
-    fresh = recalled.join(history, ["user_id", "item_id"], "left_anti")
-
-    # M3 rank: candidate vs history context, keep k_rank.
-    with_feats = (
-        fresh.join(F.broadcast(items), "item_id")
-        .join(hist_vecs, "user_id", "left")
-        .withColumn(
-            "history_vec",
-            F.coalesce(
-                F.col("history_vec"),
-                F.transform(F.col("item_vec"), lambda _: F.lit(0.0)),
-            ),
-        )
-    )
-    ranked = top_k_per_group(
-        with_feats.select(
-            "user_id",
-            "item_id",
-            "item_vec",
-            (rank_score if rank_score is not None else _default_rank_score()).alias(
-                "rank_score"
-            ),
-        ),
-        cfg.k_rank,
-        ["user_id"],
-        F.col("rank_score").desc(),
-        F.col("item_id").asc(),
-    )
-    shortlisted = top_k_per_group(
-        ranked,
-        cfg.k_rerank,
-        ["user_id"],
-        F.col("rank_score").desc(),
-        F.col("item_id").asc(),
-    )
-
-    # M4 rerank: user embedding vs item embedding, final top-k.
-    final_scored = shortlisted.join(
-        users.select("user_id", "user_vec"), "user_id"
-    ).select(
-        "user_id",
-        "item_id",
-        (rerank_score if rerank_score is not None else _default_rerank_score()).alias(
-            "rerank_score"
-        ),
-    )
-    return top_k_per_group(
-        final_scored,
-        cfg.k_final,
-        ["user_id"],
-        F.col("rerank_score").desc(),
-        F.col("item_id").asc(),
-        rank_col="rank",
-    ).select("user_id", "item_id", "rank")
+    return _cogroup_cascade(users, items, history, cfg, candidates, rank_score, rerank_score)

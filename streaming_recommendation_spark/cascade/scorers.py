@@ -1,20 +1,22 @@
-"""Model-scoring UDF surface (SURVEY §2.9 M1-M4, §2.10).
+"""Model scorers for the cascade's rank and rerank slots (SURVEY §2.9
+M3-M4, §2.10).
 
 The reference scores candidates with PyTorch modules called
 row-at-a-time from Python loops (reference: eval_online/main/
 inference.py:78-106; model_service/models.py:198-210). In this
-engine a scorer is a COLUMN: built-in vector math stays JVM-side
-(cascade.recommend's default stubs), and learned models plug in as
-Arrow-batched pandas UDFs — the vectorized path (~10-100x over
-row-at-a-time Python).
+engine a scorer is a numpy callable ``f(a, b) -> scores`` over
+(n, dim) arrays of row pairs, which ``cascade.recommend.
+cascade_kernel`` calls once per block of users inside the Arrow pass:
+(candidate item, history mean) for rank, DIN's signature; (user, item)
+for rerank, RankNet's. ``None`` in a slot keeps the kernel's cosine
+stub.
 
-``pandas_scorer`` wraps any ``f(pandas.Series, ...) -> pandas.Series``
-into such a Column factory. ``torch_module_scorer`` is the real-model
-slot with the reference's DIN/RankNet signatures; it is import-gated
-because this container ships no torch — the wrapper builds and fails
-only at evaluation time with clear guidance, mirroring how the model
-would be loaded per-executor (broadcast state dict, lazy init) in a
-real deployment (reference model loading: eval_online/main/
+``numpy_mlp_scorer`` runs a learned MLP without torch.
+``torch_module_scorer`` is the real-model slot; it is import-gated
+because this container ships no torch — the callable builds and fails
+only when called, on the executor, with clear guidance, mirroring how
+the model would be loaded per executor process (lazy init) in a real
+deployment (reference model loading: eval_online/main/
 models.py:45-80).
 """
 
@@ -22,34 +24,9 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
+import numpy as np
 
-
-def pandas_scorer(fn: Callable[..., pd.Series]) -> Callable[..., Column]:
-    """Wrap a pandas batch function into a Column factory:
-    ``score = pandas_scorer(my_fn)(col_a, col_b)``. Arrow transfers
-    the batches; Spark sizes them via
-    spark.sql.execution.arrow.maxRecordsPerBatch."""
-    udf = F.pandas_udf(fn, DoubleType())
-    return udf
-
-
-def dot_product_scorer() -> Callable[..., Column]:
-    """Vectorized dot(user_vec, item_vec) as a pandas UDF — the
-    numeric twin of the JVM-side stub; exists to exercise and
-    benchmark the Arrow path against whole-stage codegen."""
-
-    def _dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        return pd.Series(
-            [float(np.dot(x, y)) for x, y in zip(a, b)], dtype="float64"
-        )
-
-    return pandas_scorer(_dot)
+Scorer = Callable[[np.ndarray, np.ndarray], np.ndarray]
 
 
 def seeded_mlp_weights(
@@ -58,8 +35,6 @@ def seeded_mlp_weights(
     """Deterministic random-but-seeded MLP weights [(W, b), ...] for
     ``numpy_mlp_scorer`` — a stand-in for a trained state dict that
     any test environment can reproduce."""
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     dims = [in_dim, *hidden_dims, 1]
     return [
@@ -71,71 +46,58 @@ def seeded_mlp_weights(
     ]
 
 
-def numpy_mlp_scorer(weights: list) -> Callable[..., Column]:
-    """Real-model scoring path WITHOUT torch: a numpy MLP executed
-    inside an Arrow-batched pandas UDF.
+def numpy_mlp_scorer(weights: list) -> Scorer:
+    """Real-model scoring path WITHOUT torch: a numpy MLP over the
+    concatenation of its two row-pair inputs.
 
-    Signature parity with the reference's learned rankers — the MLP
-    consumes the concatenation of its two vector inputs exactly like
-    RankNet's forward (reference eval_online/main/ranknet.py:34-58:
-    concat(user_emb, item_emb) -> MLP -> score) and, fed
-    (candidate_vec, pooled_history_vec), like the post-attention half
-    of DIN's forward (eval_online/main/din.py:91-129: concat features
-    -> MLP -> sigmoid logit). ReLU hidden layers, sigmoid output.
+    Signature parity with the reference's learned rankers — exactly
+    RankNet's forward when fed (user, item) (reference eval_online/
+    main/ranknet.py:34-58: concat(user_emb, item_emb) -> MLP ->
+    score) and, fed (candidate, pooled history), the post-attention
+    half of DIN's forward (eval_online/main/din.py:91-129: concat
+    features -> MLP -> sigmoid logit). ReLU hidden layers, sigmoid
+    output.
 
     ``weights`` ([(W, b), ...], e.g. from ``seeded_mlp_weights``) ride
-    to executors in the UDF closure — the same mechanism a broadcast
-    state dict uses. Each Arrow batch is scored as ONE stacked matmul
-    chain, never row-at-a-time; W0's row count must equal
-    len(vec_a) + len(vec_b).
+    to executors in the closure — the same mechanism a broadcast
+    state dict uses. A block is scored as ONE stacked matmul chain,
+    never row-at-a-time; W0's row count must equal a's width plus
+    b's.
     """
 
-    def _score(a: pd.Series, b: pd.Series) -> pd.Series:
-        import numpy as np
-
-        x = np.concatenate(
-            [np.stack(a.to_numpy()), np.stack(b.to_numpy())], axis=1
-        ).astype("float64")
+    def score(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+        x = np.concatenate([a, b], axis=1).astype("float64")
         for i, (w, bias) in enumerate(weights):
             x = x @ w + bias
             if i < len(weights) - 1:
                 x = np.maximum(x, 0.0)
-        return pd.Series(1.0 / (1.0 + np.exp(-x[:, 0])))
+        return 1.0 / (1.0 + np.exp(-x[:, 0]))
 
-    return pandas_scorer(_score)
+    return score
 
 
-def torch_module_scorer(
-    weights_path: str,
-    kind: str = "ranknet",
-) -> Callable[..., Column]:
-    """Real-model slot: returns a Column factory that loads the traced
-    module once per executor process and scores Arrow batches.
+def torch_module_scorer(weights_path: str) -> Scorer:
+    """Real-model slot: a scorer that loads the traced module once per
+    executor process and calls it as ``model(a, b)`` on each block —
+    DIN's (candidate, history) in the rank slot (reference
+    eval_online/main/din.py:91-129), RankNet's (user, item) in the
+    rerank slot (eval_online/main/ranknet.py:85-105)."""
 
-    kind='din':     f(candidate_feats, history_feats, history_len)
-                    (reference eval_online/main/din.py:91-129)
-    kind='ranknet': f(user_feat, item_feat)
-                    (reference eval_online/main/ranknet.py:85-105)
-    """
-
-    def _score(*cols: pd.Series) -> pd.Series:
+    def score(a: np.ndarray, b: np.ndarray) -> np.ndarray:
         try:
             import torch  # type: ignore[import-not-found]
         except ImportError as e:
             raise NotImplementedError(
                 "torch_module_scorer needs PyTorch on the executors; this "
-                "container ships without it. Use the built-in Column stubs "
-                "(cascade.recommend defaults) or dot_product_scorer()."
+                "container ships without it. Use the built-in cosine stubs "
+                "(rank_score/rerank_score=None) or numpy_mlp_scorer()."
             ) from e
-        import numpy as np
-
         model = _load_model_cached(torch, weights_path)
         with torch.no_grad():
-            tensors = [torch.tensor(np.stack(c.to_numpy())) for c in cols]
-            out = model(*tensors)
-        return pd.Series(out.squeeze(-1).cpu().numpy().astype("float64"))
+            out = model(*(torch.from_numpy(np.ascontiguousarray(x)) for x in (a, b)))
+        return out.squeeze(-1).cpu().numpy().astype("float64")
 
-    return pandas_scorer(_score)
+    return score
 
 
 _MODEL_CACHE: dict[str, object] = {}

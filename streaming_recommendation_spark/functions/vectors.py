@@ -52,9 +52,9 @@ def cosine_from_norms(
 def mean_pool(arr_col: Column | str) -> Column:
     """A7: mean of an array-of-vectors column (per row) -> vector.
 
-    For the grouped form (mean of vectors across rows) use
-    operators.similarity.mean_pool_grouped, which averages per
-    dimension after posexplode — a shuffle-free partial aggregation.
+    The grouped form (mean of vectors across rows) is a posexplode and
+    a per-dimension avg (q29), or, for the cascade's history vectors,
+    ``cascade.recommend.cascade_kernel``'s numpy mean-pool.
     """
     arrs = _c(arr_col)
     n = F.size(arrs)

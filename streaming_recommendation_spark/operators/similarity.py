@@ -17,10 +17,6 @@ Re-expressed for a distributed engine:
     only their bucket. Hyperplanes are deterministic (seeded, stored
     as literals) so results are reproducible. Trades recall for a
     ~2^P candidate reduction.
-  * mean_pool_grouped — per-dimension average of vectors across rows
-    (cold-start pseudo-user, reference model_service/models.py:68-75)
-    via posexplode + groupBy: partial aggregation map-side, one
-    shuffle of (group, dim) partial sums.
 """
 
 from __future__ import annotations
@@ -32,7 +28,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine_from_norms, cosine_similarity, dot, l2_norm
+from ..functions.vectors import cosine_from_norms, dot, l2_norm
 from .topk import top_k_per_group
 
 
@@ -503,28 +499,6 @@ def ivf_knn_from_index(
         F.col("neighbor_id").asc(),
         rank_col="rank",
     ).select(query_id_col, "neighbor_id", "rank")
-
-
-def mean_pool_grouped(
-    df: DataFrame,
-    group_col: str,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Per-group mean vector: posexplode -> (group, dim) partial avg ->
-    re-assemble with array_agg sorted by dim. Two narrow shuffles, no
-    Python."""
-    exploded = df.select(
-        F.col(group_col), F.posexplode(F.col(vec_col)).alias("dim", "v")
-    )
-    avgs = exploded.groupBy(group_col, "dim").agg(F.avg("v").alias("v"))
-    return (
-        avgs.groupBy(group_col)
-        .agg(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("dim", "v"))), lambda s: s["v"]
-            ).alias("mean_vec")
-        )
-    )
 
 
 def embedding_near_dups(

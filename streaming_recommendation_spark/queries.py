@@ -1277,7 +1277,8 @@ _Q40_RECALL_CTE = """
     doc="M1-M5 three-stage cascade (recall->exclude->rank->rerank, "
     "k=100/50/20/10) over the embeddings table with deterministic "
     "embedding-math scorers. Invariants (k-chain, exclusion, "
-    "determinism, Arrow-scorer parity) in tests/test_cascade.py. The "
+    "determinism, kernel-vs-reference-plan parity) in "
+    "tests/test_cascade.py. The "
     "oracle replays every stage in SQL with float-parity arithmetic "
     "(dot recall -> history anti-join -> mean-pool history cosine rank "
     "-> user-item cosine rerank; top-50-then-20 collapses to top-20 "
@@ -4054,7 +4055,8 @@ def q102_pagerank(spark, sf_dir):
     ),
     doc="The cascade's 100 TB recall path (M1 'lsh' strategy): SRP-LSH "
     "bucketed candidate generation replaces the dense user x item "
-    "score — the item corpus never broadcasts and no crossJoin forms "
+    "score — the cascade kernel scores only each user's bucket "
+    "candidates and no crossJoin forms "
     "(plan-pinned in tests/test_plan_audit.py). Deterministic seeded "
     "hyperplanes let the oracle replay bucket assignment, OR-amplified "
     "candidate join, cosine recall ranking, and the shared cascade "
@@ -8544,13 +8546,14 @@ _Q178_SUFFIX = """, recs AS (
     "hash-random synthetic interactions (no model can beat chance "
     "on signal-free data; the PROTOCOL and exact metrics are what "
     "is under test; q172's sampled variant shows the discriminating "
-    "case). Determinism note: the cascade's rank stage mean-pools "
-    "history in float (q40's machinery verbatim) — partial-avg "
-    "combine order can vary a history vector by ~1 ulp between "
-    "runs, which flips an output rank only if two candidates' "
-    "cosines tie at ~1e-16 scale (no such tie exists in this data; "
-    "q172 is the integer-exact protocol for callers who need "
-    "tie-proof replay). Oracle: the q40 cascade SQL with the "
+    "case). Determinism note: the cascade kernel mean-pools each "
+    "user's history as a float64 sum in history row order (no "
+    "partial-avg combine); the train history comes out of a "
+    "distinct(), whose row order can differ between runs and so "
+    "vary a history vector by ~1 ulp, which flips an output rank "
+    "only if two candidates' cosines tie at ~1e-16 scale (no such "
+    "tie exists in this data; q172 is the integer-exact protocol for "
+    "callers who need tie-proof replay). Oracle: the q40 cascade SQL with the "
     "split-derived "
     "users/history prefix and a metric suffix (byte-identical tail "
     "CTEs via the parameterized builder). Scale: the cascade's own "
@@ -9091,7 +9094,7 @@ def q185_cross_snapshot_dedup(spark, sf_dir):
 
 @register(
     "q186_curation_pipeline",
-    """
+    r"""
 WITH words AS (
   SELECT doc_id,
          string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ') AS w
@@ -9299,7 +9302,7 @@ def q186_curation_pipeline(spark, sf_dir):
 
 @register(
     "q187_streaming_curation_twin",
-    """
+    r"""
 WITH qt AS (
   SELECT doc_id,
          len(regexp_extract_all(text, '\S+')) AS t0,

@@ -4,12 +4,16 @@ and determinism."""
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from streaming_recommendation_spark.cascade import CascadeConfig, recommend
+from streaming_recommendation_spark.cascade.recommend import cascade_kernel, item_side
 from streaming_recommendation_spark.sources.testdata import load_table
 
+from .cascade_reference import dense_recall, reference_recommend
 from .conftest import SF_DIR
 
 
@@ -59,76 +63,66 @@ def test_deterministic(cascade_inputs):
 
 def test_self_similarity_recall(cascade_inputs):
     """A user whose embedding IS an item's embedding and whose history
-    doesn't contain it surfaces that item first when no intermediate
-    stage cuts it (cosine(v, v) = 1 beats every other candidate at
-    recall and rerank)."""
-    from streaming_recommendation_spark.functions.vectors import cosine_similarity
-
+    doesn't contain it surfaces that item first when no stage cuts it
+    (every cut keeps all 500 items; cosine(v, v) = 1 wins the
+    rerank)."""
     users, items, history = cascade_inputs
     # user 5's vector equals item 5's vector; history = {15,16,17}
     cfg = CascadeConfig(k_recall=500, k_rank=500, k_rerank=500, k_final=1)
-    out = recommend(
-        users,
-        items,
-        history,
-        cfg,
-        recall_score=cosine_similarity("user_vec", "item_vec"),
-    ).where(F.col("user_id") == 5)
+    out = recommend(users, items, history, cfg).where(F.col("user_id") == 5)
     top = out.where(F.col("rank") == 1).collect()[0]
     assert top.item_id == 5
 
 
 def test_custom_scorer_column(cascade_inputs):
-    """Pluggable scorer: rerank by item_id descending overrides the
-    embedding stub."""
+    """Pluggable scorers: numpy callables in the rank and rerank slots
+    give exactly what the reference plan gives with the same scores as
+    Columns. The scores are asymmetric, so the pair order is pinned
+    too: rank sees (candidate item, history mean), rerank (user,
+    item)."""
     users, items, history = cascade_inputs
-    out = recommend(
-        users,
-        items,
-        history,
-        CascadeConfig(k_final=3),
-        rerank_score=F.col("item_id").cast("double"),
+    cfg = CascadeConfig(k_recall=60, k_rank=20, k_rerank=10, k_final=5)
+    got = _rows(
+        recommend(
+            users,
+            items,
+            history,
+            cfg,
+            rank_score=lambda item, hist: item[:, 0] - hist[:, 1],
+            rerank_score=lambda user, item: user[:, 2] * item[:, 3],
+        )
     )
-    for r in out.where(F.col("rank") == 1).collect():
-        # rank-1 item must be the max item_id among that user's shortlist
-        assert r.item_id > 400  # embeddings table has 500 ids; shortlist top is high
-
-
-def test_pandas_udf_scorer_matches_jvm_stub(cascade_inputs):
-    """The Arrow-batched dot-product scorer must produce the same
-    ranking as the JVM-side zip_with/aggregate stub."""
-    from streaming_recommendation_spark.cascade.scorers import dot_product_scorer
-
-    users, items, history = cascade_inputs
-    cfg = CascadeConfig(k_recall=40, k_rank=20, k_rerank=10, k_final=5)
-    jvm = recommend(users, items, history, cfg)
-    udf_scorer = dot_product_scorer()
-    arrow = recommend(
-        users, items, history, cfg,
-        recall_score=udf_scorer(F.col("user_vec"), F.col("item_vec")),
+    ref = _rows(
+        reference_recommend(
+            users,
+            items,
+            history,
+            cfg,
+            rank_score=F.col("item_vec")[0] - F.col("history_vec")[1],
+            rerank_score=F.col("user_vec")[2] * F.col("item_vec")[3],
+        )
     )
-    assert sorted(map(tuple, jvm.collect())) == sorted(map(tuple, arrow.collect()))
+    assert got == ref
+    assert len(got) == 10 * 5
+    assert got != _rows(recommend(users, items, history, cfg))
 
 
 def test_torch_scorer_import_gate(cascade_inputs):
+    """Without torch the scorer still builds; it fails when called —
+    on the executor, inside the cascade's Arrow pass — with guidance."""
     from streaming_recommendation_spark.cascade.scorers import torch_module_scorer
 
-    users, items, history = cascade_inputs
     try:
         import torch  # noqa: F401
-        import pytest as _pytest
 
-        _pytest.skip("torch unexpectedly present")
+        pytest.skip("torch unexpectedly present")
     except ImportError:
         pass
-    import pytest as _pytest
 
+    users, items, history = cascade_inputs
     scorer = torch_module_scorer("/nonexistent/model.pt")
-    with _pytest.raises(Exception) as ei:
-        recommend(
-            users, items, history, CascadeConfig(),
-            rerank_score=scorer(F.col("user_vec"), F.col("item_vec")),
-        ).collect()
+    with pytest.raises(Exception) as ei:
+        recommend(users, items, history, CascadeConfig(), rerank_score=scorer).collect()
     assert "PyTorch" in str(ei.value) or "NotImplementedError" in str(ei.value)
 
 
@@ -156,11 +150,8 @@ def test_lsh_recall_strategy(cascade_inputs):
 def test_numpy_mlp_scorer_end_to_end(cascade_inputs):
     """The real-model slot proven without torch: a seeded numpy MLP
     (RankNet forward parity — concat(user, item) -> ReLU MLP ->
-    sigmoid, reference eval_online/main/ranknet.py:34-58) runs through
-    the SAME Arrow-batched pandas-UDF path torch_module_scorer uses,
-    end-to-end inside the cascade's rerank stage."""
-    import numpy as np
-
+    sigmoid, reference eval_online/main/ranknet.py:34-58) runs in the
+    cascade's rerank slot, the slot torch_module_scorer fills."""
     from streaming_recommendation_spark.cascade.scorers import (
         numpy_mlp_scorer,
         seeded_mlp_weights,
@@ -170,41 +161,31 @@ def test_numpy_mlp_scorer_end_to_end(cascade_inputs):
     weights = seeded_mlp_weights(in_dim=128, hidden_dims=(16, 8), seed=7)
     scorer = numpy_mlp_scorer(weights)
     cfg = CascadeConfig(k_recall=40, k_rank=20, k_rerank=10, k_final=5)
-    out = recommend(
-        users, items, history, cfg,
-        rerank_score=scorer(F.col("user_vec"), F.col("item_vec")),
-    )
-    rows = out.collect()
+    rows = recommend(users, items, history, cfg, rerank_score=scorer).collect()
     per_user = {}
     for r in rows:
         per_user.setdefault(r.user_id, []).append((r.rank, r.item_id))
     assert len(per_user) == 10
     for recs in per_user.values():
         assert sorted(r[0] for r in recs) == [1, 2, 3, 4, 5]
-    # deterministic across runs (seeded weights, Arrow batching)
-    again = recommend(
-        users, items, history, cfg,
-        rerank_score=scorer(F.col("user_vec"), F.col("item_vec")),
-    ).collect()
+    # deterministic across runs (seeded weights)
+    again = recommend(users, items, history, cfg, rerank_score=scorer).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
     # the MLP genuinely reorders vs the cosine stub on the same inputs
     stub = recommend(users, items, history, cfg).collect()
     assert sorted(map(tuple, stub)) != sorted(map(tuple, rows))
 
-    # UDF-level parity with a plain-numpy forward pass
-    import pandas as pd
-
+    # scorer-level parity with a plain-numpy forward pass
     rng = np.random.default_rng(3)
-    a = pd.Series([rng.normal(size=64) for _ in range(32)])
-    b = pd.Series([rng.normal(size=64) for _ in range(32)])
-    x = np.concatenate([np.stack(a.to_numpy()), np.stack(b.to_numpy())], axis=1)
+    a = rng.normal(size=(32, 64))
+    b = rng.normal(size=(32, 64))
+    x = np.concatenate([a, b], axis=1)
     for i, (w, bias) in enumerate(weights):
         x = x @ w + bias
         if i < len(weights) - 1:
             x = np.maximum(x, 0.0)
     expect = 1.0 / (1.0 + np.exp(-x[:, 0]))
-    got = scorer.func(a, b)
-    assert np.allclose(got.to_numpy(), expect)
+    assert np.allclose(scorer(a, b), expect)
 
 
 def test_category_capped_topk_greedy_equivalence(spark):
@@ -240,44 +221,22 @@ def _rows(df):
 
 
 def test_vectorized_recall_matches_jvm(cascade_inputs):
-    """The numpy cascade kernel (the default when no scorer Column is
-    given) is bit-identical to the crossJoin+window JVM reference —
-    same floats, same (score desc, item_id asc) tie-breaks, same final
-    lists — and its recall stage selects the exact same (user, item)
-    candidate set: with no history and every later cut wider than
-    k_recall, the output IS the recall set."""
-    from streaming_recommendation_spark.cascade.recommend import (
-        _default_recall_score,
-        _fused_brute_cascade,
-    )
-    from streaming_recommendation_spark.operators.topk import top_k_per_group
+    """The numpy cascade kernel is bit-identical to the crossJoin +
+    window reference — same floats, same (score desc, item_id asc)
+    tie-breaks, same final lists — and its recall stage selects the
+    exact same (user, item) candidate set: with no history and every
+    later cut wider than k_recall, the output IS the recall set."""
+    from streaming_recommendation_spark.cascade.recommend import _cogroup_cascade
 
     users, items, history = cascade_inputs
     cfg = CascadeConfig(k_recall=50, k_rank=25, k_rerank=12, k_final=5)
-    vec = recommend(users, items, history, cfg, recall_strategy="brute")
-    jvm = recommend(users, items, history, cfg, recall_strategy="brute_jvm")
-    assert _rows(vec) == _rows(jvm)
+    vec = recommend(users, items, history, cfg)
+    assert _rows(vec) == _rows(reference_recommend(users, items, history, cfg))
 
     wide = CascadeConfig(k_recall=37, k_rank=500, k_rerank=500, k_final=500)
-    got = _fused_brute_cascade(users, items, history.where(F.lit(False)), wide)
+    got = _cogroup_cascade(users, items, history.where(F.lit(False)), wide)
     got = sorted(map(tuple, got.select("user_id", "item_id").collect()))
-    scored = users.crossJoin(F.broadcast(items)).select(
-        "user_id", "item_id", _default_recall_score().alias("recall_score")
-    )
-    ref = sorted(
-        map(
-            tuple,
-            top_k_per_group(
-                scored,
-                37,
-                ["user_id"],
-                F.col("recall_score").desc(),
-                F.col("item_id").asc(),
-            )
-            .select("user_id", "item_id")
-            .collect(),
-        )
-    )
+    ref = sorted(map(tuple, dense_recall(users, items, 37).collect()))
     assert len(got) == 10 * 37
     assert got == ref
 
@@ -318,14 +277,14 @@ def tied_items(cascade_inputs):
     ids=["default_k", "k_rank_lt_k_rerank", "k_recall_ge_items"],
 )
 def test_fused_cascade_matches_jvm(cascade_inputs, edge_history, tied_items, cfg):
-    """Fused kernel vs recall_strategy="brute_jvm": identical
+    """Fused kernel vs the crossJoin + window reference: identical
     (user_id, item_id, rank) rows, including a user with no known
     history item, a user with duplicate history items, and items whose
     scores tie exactly."""
     users, _items, _history = cascade_inputs
     items = tied_items
     fused = _rows(recommend(users, items, edge_history, cfg))
-    jvm = _rows(recommend(users, items, edge_history, cfg, recall_strategy="brute_jvm"))
+    jvm = _rows(reference_recommend(users, items, edge_history, cfg))
     assert fused == jvm
     assert {r[0] for r in fused} == set(range(10))
     assert all(r[2] <= cfg.k_final for r in fused)
@@ -343,6 +302,114 @@ def test_fused_cascade_matches_jvm_without_user_vec(cascade_inputs, edge_history
     users, items, _history = cascade_inputs
     ids = users.select("user_id")
     fused = _rows(recommend(ids, items, edge_history, cfg))
-    jvm = _rows(recommend(ids, items, edge_history, cfg, recall_strategy="brute_jvm"))
+    jvm = _rows(reference_recommend(ids, items, edge_history, cfg))
     assert fused == jvm
     assert {r[0] for r in fused} == set(range(1, 10))
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        CascadeConfig(lsh_dim=64),
+        CascadeConfig(k_recall=40, k_rank=8, k_rerank=15, k_final=5, lsh_dim=64),
+    ],
+    ids=["default_k", "k_rank_lt_k_rerank"],
+)
+def test_lsh_cascade_matches_reference(cascade_inputs, edge_history, tied_items, cfg):
+    """recall_strategy="lsh" feeds lsh_knn's candidates to the kernel:
+    identical rows to the reference plan fed the same recall, with the
+    edge-history users and exactly tied items."""
+    from streaming_recommendation_spark.operators.similarity import lsh_knn
+
+    users, _items, _history = cascade_inputs
+    items = tied_items
+    recalled = lsh_knn(
+        items,
+        users.select("user_id", F.col("user_vec").alias("item_vec")),
+        k=cfg.k_recall,
+        dim=64,
+        id_col="item_id",
+        vec_col="item_vec",
+        query_id_col="user_id",
+    ).select("user_id", F.col("neighbor_id").alias("item_id"))
+    got = _rows(recommend(users, items, edge_history, cfg, recall_strategy="lsh"))
+    ref = _rows(reference_recommend(users, items, edge_history, cfg, recalled=recalled))
+    assert got == ref
+    assert {r[0] for r in got} == set(range(10))
+
+
+def test_recall_strategy_is_checked(cascade_inputs):
+    """An unknown recall strategy (a typo included) raises instead of
+    falling back to another recall, and LSH without user vectors
+    raises: the candidates are the users' own LSH neighbours."""
+    users, items, history = cascade_inputs
+    for strategy in ("lhs", "brute_jvm", ""):
+        with pytest.raises(ValueError, match="recall_strategy"):
+            recommend(users, items, history, recall_strategy=strategy)
+    with pytest.raises(ValueError, match="user_vec"):
+        recommend(
+            users.select("user_id"),
+            items,
+            history,
+            CascadeConfig(lsh_dim=64),
+            recall_strategy="lsh",
+        )
+
+
+def _kernel_inputs():
+    """Three users (positions 0-2) over 40 random float32 items with
+    ids 100..139; user 0 has seen 100 and 101, user 1 105, user 2
+    120."""
+    rng = np.random.default_rng(11)
+    vecs = rng.normal(size=(40, 6)).astype(np.float32)
+    items = item_side(pd.DataFrame({"item_id": np.arange(100, 140), "item_vec": list(vecs)}))
+    user_vecs = rng.normal(size=(3, 6)).astype(np.float32)
+    return (
+        np.array([7, 8, 9]),
+        user_vecs,
+        np.array([0, 0, 1, 2]),
+        np.array([100, 101, 105, 120]),
+        items,
+        vecs,
+    )
+
+
+def test_kernel_candidates_input():
+    """cascade_kernel with given candidates (no Spark): the dense
+    top-k_recall set, given in any order, reproduces the dense path;
+    short lists keep what survives exclusion, in rerank order; a user
+    with no candidate, or only unknown ids, gets nothing."""
+    user_ids, user_vecs, hist_users, hist_items, items, vecs = _kernel_inputs()
+    cfg = CascadeConfig(k_recall=12, k_rank=6, k_rerank=8, k_final=4)
+    dense = cascade_kernel(user_ids, user_vecs, hist_users, hist_items, items, cfg)
+    assert len(dense[0]) == 3 * 4
+
+    # the dense recall set: no history and no cut after recall
+    wide = CascadeConfig(k_recall=12, k_rank=99, k_rerank=99, k_final=99)
+    pos, recalled, _ = cascade_kernel(
+        user_ids, user_vecs, hist_users[:0], hist_items[:0], items, wide
+    )
+    assert len(recalled) == 3 * 12
+    given = cascade_kernel(
+        user_ids, user_vecs, hist_users, hist_items, items, cfg, (pos[::-1], recalled[::-1])
+    )
+    for a, b in zip(given, dense):
+        np.testing.assert_array_equal(a, b)
+
+    # user 0: one seen and one fresh candidate; user 1: three fresh
+    # ones; user 2: only an unknown id
+    cand = (np.array([0, 1, 0, 1, 1, 2]), np.array([101, 110, 130, 111, 112, 999]))
+    u, item_id, rank = cascade_kernel(
+        user_ids, user_vecs, hist_users, hist_items, items, cfg, cand
+    )
+    v = vecs[[10, 11, 12]].astype(np.float64)
+    cos = v @ user_vecs[1] / (np.linalg.norm(v, axis=1) * np.linalg.norm(user_vecs[1]))
+    assert u.tolist() == [0, 1, 1, 1]
+    assert item_id.tolist() == [130, *(110 + np.argsort(-cos)).tolist()]
+    assert rank.tolist() == [1, 1, 2, 3]
+
+    # nobody has a candidate
+    none = cascade_kernel(
+        user_ids, user_vecs, hist_users, hist_items, items, cfg, (np.array([], np.intp), np.array([], np.int64))
+    )
+    assert all(len(a) == 0 for a in none)

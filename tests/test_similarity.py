@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from streaming_recommendation_spark.operators.similarity import (
     knn_brute_force,
     lsh_knn,
-    mean_pool_grouped,
 )
 from streaming_recommendation_spark.sources.testdata import load_table
 
@@ -74,20 +73,6 @@ def test_lsh_recall_vs_exact(spark, emb):
     for q in exact:
         assert q in approx.get(q, set())
     assert mean_recall > 0.3, f"mean recall {mean_recall:.2f} too low"
-
-
-def test_mean_pool_grouped_matches_numpy(spark, emb):
-    rows = emb.collect()
-    by_label = {}
-    for r in rows:
-        by_label.setdefault(r.label, []).append(r.embedding)
-    expected = {
-        lbl: np.mean(np.array(vs, dtype=np.float64), axis=0)
-        for lbl, vs in by_label.items()
-    }
-    got = {r.label: r.mean_vec for r in mean_pool_grouped(emb, "label").collect()}
-    for lbl, exp in expected.items():
-        assert np.allclose(got[lbl], exp, atol=1e-6), f"label {lbl}"
 
 
 def test_embedding_near_dups(spark):

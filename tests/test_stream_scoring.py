@@ -15,6 +15,7 @@ from streaming_recommendation_spark.streaming.scoring import (
     score_batch,
 )
 
+from .cascade_reference import reference_recommend
 from .conftest import SF_DIR
 
 
@@ -198,9 +199,7 @@ def test_score_batch_keeps_profile_versions_separate(spark, items):
 def _jvm_reference(profiles, items, cfg):
     """score_batch's result through the DataFrame plan: history keys
     matched to items as strings, user vector = history mean-pool
-    (users without user_vec), recall_strategy="brute_jvm"."""
-    from streaming_recommendation_spark.cascade import recommend
-
+    (users without user_vec), the crossJoin + window reference."""
     history = profiles.select(
         F.concat_ws(":", F.col("user_id"), F.col("timestamp").cast("string")).alias(
             "user_id"
@@ -212,12 +211,8 @@ def _jvm_reference(profiles, items, cfg):
         ),
         "item_key",
     ).select("user_id", "item_id")
-    recs = recommend(
-        history.select("user_id").distinct(),
-        items,
-        history,
-        cfg,
-        recall_strategy="brute_jvm",
+    recs = reference_recommend(
+        history.select("user_id").distinct(), items, history, cfg
     ).collect()
     out = {}
     for r in sorted(recs, key=lambda r: (r.user_id, r["rank"])):
