@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.audit import checkpoint_partitioned, round_width
+from ..plans.audit import checkpoint_partitioned
 from .dedup import normalize_text, spread
 
 
@@ -204,24 +204,18 @@ def learn_bpe(
         raise ValueError(f"unknown strategy: {strategy!r}")
     if count_mode not in ("full", "delta"):
         raise ValueError(f"unknown count_mode: {count_mode!r}")
-    # Round layouts sized to the VOCAB frame, not the core count
-    # (OPTIMIZATION_r13, VERDICT r12 #1): the trainer's whole working
-    # set is the distinct-word table (Zipf-bounded — a few MB at
-    # bench scale, bounded at any corpus scale), yet every round's
-    # checkpoints/collect jobs inherited a shuffle.partitions-wide
-    # layout from the initial groupBy. One narrow coalesce after the
-    # (corpus-scan-priced) first materialization makes every
-    # subsequent round job frame-sized; at production width the
-    # round_width cap makes this a no-op.
-    wf, wf_bytes = checkpoint_partitioned(
+    # the trainer's whole working set is the distinct-word table
+    # (Zipf-bounded — a few MB at bench scale, bounded at any corpus
+    # scale), yet every round's checkpoints/collect jobs would inherit
+    # a shuffle.partitions-wide layout from the initial groupBy; as a
+    # static side it is coalesced to a frame-sized width, and the
+    # pair-count rounds are sized from it
+    wf = checkpoint_partitioned(
         word_frequency_table(df, text_col, repartition).withColumn(
             "__seg", _init_seg(F.col("__word"))
         ),
-        return_bytes=True,
+        static=True,
     )
-    w = round_width(wf_bytes, df.sparkSession)
-    if w is not None:
-        wf = wf.coalesce(w)  # narrow relayout: no shuffle, no-op if w >= width
     if stats is not None:
         # expose the materialized vocab (OPTIMIZATION_r13): a caller
         # that applies the tokenizer to the SAME corpus can hand it
@@ -229,7 +223,7 @@ def learn_bpe(
         # distinct-word set with a second corpus explode
         stats["wordfreq"] = wf
     pc = (
-        checkpoint_partitioned(_pair_counts(wf), width=w)
+        checkpoint_partitioned(_pair_counts(wf), size_from=wf)
         if count_mode == "delta"
         else None
     )
@@ -310,7 +304,7 @@ def learn_bpe(
                 .groupBy("pair")
                 .agg(F.sum("cnt").alias("cnt"))
                 .where(F.col("cnt") > 0),
-                width=w,
+                size_from=wf,
             )
         merges.extend(m if return_counts else (m[0], m[1]) for m in retained)
         wf = checkpoint_partitioned(wf.withColumn("__seg", seg))

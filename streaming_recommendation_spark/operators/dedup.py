@@ -32,11 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hashing import det_hash_str
-from ..plans.audit import (
-    checkpoint_partitioned,
-    local_checkpoint_measured,
-    round_width,
-)
+from ..plans.audit import checkpoint_partitioned
 
 # Carter-Wegman family g_i(h) = (a_i*h + b_i) mod P over the Mersenne
 # prime P = 2^31-1, with the shingle hash h restricted to 28 bits
@@ -507,9 +503,9 @@ def connected_components(
     # sym below each materialize separately, and without this both
     # would re-run the whole upstream candidate-pair pipeline (plans
     # are trees; exchange reuse does not cross separate executions)
-    raw, raw_bytes = local_checkpoint_measured(
-        edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
-    )
+    raw = edges.select(
+        F.col(src).alias("node"), F.col(dst).alias("nbr")
+    ).localCheckpoint()
     base = raw.union(
         raw.select(F.col("nbr").alias("node"), F.col("node").alias("nbr"))
     )
@@ -524,19 +520,12 @@ def connected_components(
     # drops from 4 exchanges + a join-count job to 2 exchanges
     # (labels by nbr — the static sym side reuses its checkpointed
     # layout — and the message groupBy) + the count.
-    # OPTIMIZATION_r13 (VERDICT r12 #1): the static edge side's width
-    # derives from the measured raw-pair bytes (sym ~ 3x raw: both
-    # directions + self-loops), not from the core count — every
-    # round's message join inherits this layout, so for the KB-scale
-    # dedup graphs the rounds stop scheduling core-count-wide stages;
-    # round_width's shuffle.partitions cap keeps 100 TB behavior.
-    w = round_width(None if raw_bytes is None else 3 * raw_bytes,
-                    edges.sparkSession)
+    # the static edge side is sized from the raw pairs, not the core
+    # count: every round's message join inherits this layout
     sym = checkpoint_partitioned(
-        base.union(
-            labels.select("node", F.col("node").alias("nbr"))
-        ).repartition("nbr"),
-        width=w,
+        base.union(labels.select("node", F.col("node").alias("nbr"))),
+        "nbr",
+        size_from=raw,
     )
     rounds = 0
     # max_iter + 1: detecting the fixpoint costs one extra

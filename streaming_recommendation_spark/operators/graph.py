@@ -18,11 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.audit import (
-    checkpoint_partitioned,
-    narrow_static_layout,
-    round_width,
-)
+from ..plans.audit import checkpoint_partitioned
 
 RANK_SCALE = 1 << 20  # rank unit = 2^-20 of total mass
 
@@ -34,7 +30,6 @@ def pagerank_quantized(
     rounds: int = 3,
     damping_pct: int = 85,
     scale: int = RANK_SCALE,
-    materialize: bool = True,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
     """PageRank over the UNDIRECTED graph (edges symmetrized), ranks
@@ -54,12 +49,12 @@ def pagerank_quantized(
     each round like connected_components does (lineage truncation),
     and pre-partition edges by src so every superstep reuses the
     same partitioning without re-shuffling the (static) edge side.
-    ``materialize=True`` (default) does exactly that here:
-    localCheckpoint the symmetrized edges once and each round's rank
-    vector (ITERATIVE operator, same policy as connected_components
-    — without it round k replays rounds 1..k-1 AND the upstream edge
-    join, ~2x wall at 3 rounds, quadratic deeper). On a real cluster
-    prefer a reliable checkpoint dir.
+    This operator does exactly that: it localCheckpoints the
+    symmetrized edges once and each round's rank vector (ITERATIVE
+    operator, same policy as connected_components — without it round
+    k replays rounds 1..k-1 AND the upstream edge join, ~2x wall at 3
+    rounds, quadratic deeper). On a real cluster prefer a reliable
+    checkpoint dir.
 
     Quantization error: each div truncates < 1 rank unit = 2^-20 of
     total mass per node per round — negligible against PageRank's
@@ -77,22 +72,12 @@ def pagerank_quantized(
     """
     fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     rev = edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-    sym = fwd.union(rev).distinct()
-    if materialize:
-        # hash-partition the static edge side by the superstep join key
-        # ONCE; checkpoint_partitioned keeps the layout visible to the
-        # planner, so every round's rank join AND the degree aggregate
-        # reuse it instead of re-shuffling the edge list per superstep
-        # (plan-asserted in tests/test_plan_audit.py).
-        # OPTIMIZATION_r13 (VERDICT r12 #1): when the materialized
-        # edge side turns out SMALL, re-layout it frame-sized so the
-        # per-round join stages stop scheduling core-count-wide
-        # layouts over KB frames (bounded cost — see
-        # narrow_static_layout; a no-op at 100 TB).
-        sym, sym_bytes = checkpoint_partitioned(
-            sym.repartition("u"), return_bytes=True
-        )
-        sym = narrow_static_layout(sym, sym_bytes, "u")
+    # hash-partition the static edge side by the superstep join key
+    # ONCE; checkpoint_partitioned keeps the layout visible to the
+    # planner, so every round's rank join AND the degree aggregate
+    # reuse it instead of re-shuffling the edge list per superstep
+    # (plan-asserted in tests/test_plan_audit.py)
+    sym = checkpoint_partitioned(fwd.union(rev).distinct(), "u", static=True)
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     nodes = deg.select(F.col("u").alias("node"), "deg")
     if seeds is None:
@@ -153,8 +138,7 @@ def pagerank_quantized(
                 ).alias("rank"),
             )
         )
-        if materialize:
-            ranks = ranks.localCheckpoint()
+        ranks = ranks.localCheckpoint()
     return ranks.select("node", "rank")
 
 
@@ -162,7 +146,6 @@ def triangle_counts(
     edges: DataFrame,
     a: str = "a",
     b: str = "b",
-    materialize: bool = True,
 ) -> DataFrame:
     """Per-node triangle counts via degree-ordered edge orientation
     (the compact-forward / MapReduce node-iterator++ algorithm,
@@ -197,8 +180,7 @@ def triangle_counts(
         )
         .distinct()
     )
-    if materialize:
-        und = checkpoint_partitioned(und.repartition("a", "b"))
+    und = checkpoint_partitioned(und, "a", "b")
     deg = (
         und.select(F.col("a").alias("n"))
         .union(und.select(F.col("b").alias("n")))
@@ -238,12 +220,11 @@ def triangle_counts(
         )
         .select("e.u", "e.v")
     )
-    if materialize:
-        # the wedge stage self-joins `oriented` — without materializing
-        # it once, BOTH join legs recompute the two degree joins above;
-        # partitioning by the wedge key u lets the self-join reuse one
-        # layout with zero extra exchanges
-        oriented = checkpoint_partitioned(oriented.repartition("u"))
+    # the wedge stage self-joins `oriented` — without materializing
+    # it once, BOTH join legs recompute the two degree joins above;
+    # partitioning by the wedge key u lets the self-join reuse one
+    # layout with zero extra exchanges
+    oriented = checkpoint_partitioned(oriented, "u")
     o1 = oriented.select(F.col("u"), F.col("v").alias("v1"))
     o2 = oriented.select(F.col("u"), F.col("v").alias("v2"))
     # wedges at the LOW-degree center u; canonical pair (v1 < v2 by id)
@@ -268,7 +249,6 @@ def bfs_distances(
     src: str = "src",
     dst: str = "dst",
     max_hops: int = 4,
-    materialize: bool = True,
 ) -> DataFrame:
     """Bounded-hop BFS: (node, distance) = minimum number of edge
     hops from any node in ``seeds`` (a 1-column ``node`` frame),
@@ -294,25 +274,18 @@ def bfs_distances(
     would otherwise replay hops 1..k-1 in every later branch — the
     same O(L^2)->O(L) move as random_walks).
     """
-    adj = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    frontier_bytes: int | None = None
-    if materialize:
-        # OPTIMIZATION_r13 (VERDICT r12 #1): frame-sized static side
-        # + per-hop frontier layouts (see narrow_static_layout /
-        # round_width — both no-ops at production widths)
-        adj, adj_bytes = checkpoint_partitioned(
-            adj.repartition("u"), return_bytes=True
-        )
-        adj = narrow_static_layout(adj, adj_bytes, "u")
-        frontier_bytes = adj_bytes  # hop-1 upper bound: frontier <= adj
+    adj = checkpoint_partitioned(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+        "u",
+        static=True,
+    )
     # defensive dedup: a repeated seed row must not emit a duplicate
     # distance-0 row (and would double that seed's frontier fan-out)
     seed_nodes = seeds.select("node").distinct()
-    visited = seed_nodes.select("node", F.lit(0).alias("distance"))
-    frontier = seed_nodes
-    if materialize:
-        visited = visited.localCheckpoint()
-        frontier = frontier.localCheckpoint()
+    visited = seed_nodes.select(
+        "node", F.lit(0).alias("distance")
+    ).localCheckpoint()
+    frontier = seed_nodes.localCheckpoint()
     for t in range(1, max_hops + 1):
         nxt = (
             frontier.join(adj, frontier["node"] == adj["u"])
@@ -320,21 +293,13 @@ def bfs_distances(
             .distinct()
             .join(visited, "node", "left_anti")
         )
-        if materialize:
-            nxt, nb = checkpoint_partitioned(
-                nxt.repartition("node"),
-                width=round_width(frontier_bytes, nxt.sparkSession),
-                return_bytes=True,
-            )
-            # keep the last known size when a hop is empty (the block
-            # manager lists no entry for a 0-byte frame)
-            frontier_bytes = nb if nb is not None else frontier_bytes
-        visited = visited.unionByName(
-            nxt.select("node", F.lit(t).alias("distance"))
+        # hop 1 is sized from the edge side: its frontier <= adj
+        frontier = checkpoint_partitioned(
+            nxt, "node", size_from=frontier if t > 1 else adj
         )
-        if materialize:
-            visited = visited.localCheckpoint()
-        frontier = nxt
+        visited = visited.unionByName(
+            frontier.select("node", F.lit(t).alias("distance"))
+        ).localCheckpoint()
     return visited
 
 
@@ -415,7 +380,6 @@ def random_walks(
     walks_per_node: int = 1,
     start_nodes: DataFrame | None = None,
     max_degree: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Deterministic fixed-length random walks — the DeepWalk/node2vec
     corpus-generation step (the walk corpus IS the embedding model's
@@ -460,15 +424,7 @@ def random_walks(
     if max_degree is not None:
         # deterministic hub cap: the max_degree smallest neighbor ids
         adj = adj.withColumn("__nbrs", F.slice("__nbrs", 1, max_degree))
-    if materialize:
-        # OPTIMIZATION_r13 (VERDICT r12 #1): frame-sized layouts for
-        # the static adjacency and the per-step frontiers (no-ops at
-        # production widths — see narrow_static_layout / round_width)
-        adj, adj_bytes = checkpoint_partitioned(
-            adj.repartition("__n"), return_bytes=True
-        )
-        adj = narrow_static_layout(adj, adj_bytes, "__n")
-        frontier_bytes = adj_bytes  # step-1 seed: refined per step below
+    adj = checkpoint_partitioned(adj, "__n", static=True)
 
     starts = (
         start_nodes
@@ -504,28 +460,21 @@ def random_walks(
             * F.lit(KNUTH),
             F.lit(MOD32),
         )
-        frontier = (
-            frontier.join(adj, frontier["node"] == adj["__n"])
-            .select(
-                "walk_id",
-                F.element_at(
-                    "__nbrs", (F.pmod(h, F.size("__nbrs")) + 1).cast("int")
-                ).alias("node"),
-            )
+        step = frontier.join(adj, frontier["node"] == adj["__n"]).select(
+            "walk_id",
+            F.element_at(
+                "__nbrs", (F.pmod(h, F.size("__nbrs")) + 1).cast("int")
+            ).alias("node"),
         )
-        if materialize:
-            # without this, branch t of the output union re-executes
-            # joins 1..t (nothing shares subplans across union
-            # branches) — O(L^2) joins; checkpointing each frontier
-            # keeps it O(L), the same lineage-truncation move as
-            # pagerank's per-round checkpoint, and the node key
-            # partitioning co-locates the next join against adj
-            frontier, fb = checkpoint_partitioned(
-                frontier.repartition("node"),
-                width=round_width(frontier_bytes, frontier.sparkSession),
-                return_bytes=True,
-            )
-            frontier_bytes = fb if fb is not None else frontier_bytes
+        # without this, branch t of the output union re-executes
+        # joins 1..t (nothing shares subplans across union branches)
+        # — O(L^2) joins; checkpointing each frontier keeps it O(L),
+        # the same lineage-truncation move as pagerank's per-round
+        # checkpoint, and the node key partitioning co-locates the
+        # next join against adj. Step 1 is sized from adj.
+        frontier = checkpoint_partitioned(
+            step, "node", size_from=frontier if t > 1 else adj
+        )
         out = out.unionByName(
             frontier.select("walk_id", F.lit(t).alias("step"), "node")
         )
@@ -654,7 +603,6 @@ def kcore(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 3,
-    materialize: bool = True,
 ) -> DataFrame:
     """Bounded-round k-core peeling over the UNDIRECTED graph (edges
     symmetrized, self-loops dropped): repeatedly delete nodes with
@@ -685,16 +633,11 @@ def kcore(
     """
     fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     rev = edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-    sym = fwd.union(rev).where(F.col("u") != F.col("v")).distinct()
-    surviving_bytes: int | None = None
-    if materialize:
-        # OPTIMIZATION_r13 (VERDICT r12 #1): frame-sized static side +
-        # per-round peel layouts (no-ops at production widths)
-        sym, sym_bytes = checkpoint_partitioned(
-            sym.repartition("u"), return_bytes=True
-        )
-        sym = narrow_static_layout(sym, sym_bytes, "u")
-        surviving_bytes = sym_bytes
+    sym = checkpoint_partitioned(
+        fwd.union(rev).where(F.col("u") != F.col("v")).distinct(),
+        "u",
+        static=True,
+    )
     if isinstance(k, int):
         k_frame = None
         k_expr = F.lit(k)
@@ -704,9 +647,7 @@ def kcore(
         # derivation's whole lineage (e.g. q152's median window) —
         # same lineage-truncation rationale as the per-round
         # checkpoints below
-        kf = k.select(F.col(k.columns[0]).alias("__k"))
-        if materialize:
-            kf = kf.localCheckpoint()
+        kf = k.select(F.col(k.columns[0]).alias("__k")).localCheckpoint()
         k_frame = F.broadcast(kf)
         k_expr = F.col("__k")
     surviving = sym
@@ -716,16 +657,13 @@ def kcore(
             deg if k_frame is None else deg.crossJoin(k_frame)
         )
         alive = alive_base.where(F.col("__deg") >= k_expr).select("u")
-        surviving = surviving.join(alive, "u", "left_semi").join(
-            alive.select(F.col("u").alias("v")), "v", "left_semi"
+        surviving = checkpoint_partitioned(
+            surviving.join(alive, "u", "left_semi").join(
+                alive.select(F.col("u").alias("v")), "v", "left_semi"
+            ),
+            "u",
+            size_from=surviving,
         )
-        if materialize:
-            surviving, sb = checkpoint_partitioned(
-                surviving.repartition("u"),
-                width=round_width(surviving_bytes, surviving.sparkSession),
-                return_bytes=True,
-            )
-            surviving_bytes = sb if sb is not None else surviving_bytes
     return surviving.groupBy(F.col("u").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -872,7 +810,6 @@ def propagate_embeddings(
     rounds: int = 2,
     src: str = "src",
     dst: str = "dst",
-    materialize: bool = True,
 ) -> DataFrame:
     """LightGCN-style embedding propagation over the UNDIRECTED graph
     (edges symmetrized), in INTEGER feature units: per round
@@ -904,27 +841,18 @@ def propagate_embeddings(
     edge list on the source key plus ONE groupBy(dst, dim) message
     aggregation — the Pregel superstep, every shuffle keyed by node
     id. The static symmetrized edge side is hash-partitioned and
-    checkpointed ONCE (``materialize``, same policy as
-    pagerank_quantized); each round's features checkpoint too, so
-    round k never replays rounds 1..k-1 (the O(L^2) -> O(L) lineage
-    move)."""
+    checkpointed ONCE (same policy as pagerank_quantized); each
+    round's features checkpoint too, so round k never replays rounds
+    1..k-1 (the O(L^2) -> O(L) lineage move)."""
     fwd = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     rev = edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
-    sym = fwd.union(rev).distinct()
-    feat_bytes: int | None = None
-    if materialize:
-        # OPTIMIZATION_r13 (VERDICT r12 #1): frame-sized static side +
-        # per-layer feature layouts (no-ops at production widths)
-        sym, sym_bytes = checkpoint_partitioned(
-            sym.repartition("u"), return_bytes=True
-        )
-        sym = narrow_static_layout(sym, sym_bytes, "u")
+    sym = checkpoint_partitioned(fwd.union(rev).distinct(), "u", static=True)
     deg = sym.groupBy(F.col("v").alias("node")).agg(
         F.count(F.lit(1)).alias("__deg")
     )
     cur = features.select("node", "dim", F.col("val").alias("e"))
     acc = cur.select("node", "dim", F.col("e").alias("acc"))
-    for _ in range(rounds):
+    for r in range(rounds):
         msgs = (
             cur.join(sym, cur["node"] == sym["u"])
             .groupBy(F.col("v").alias("node"), F.col("dim"))
@@ -934,7 +862,7 @@ def propagate_embeddings(
         # `div`: they differ on negative dividends (centered features),
         # and the q163 oracle floors — exact in integers, no double
         # round-trip (ADVICE r7). __deg is a count, always > 0.
-        cur = msgs.join(deg, "node").select(
+        layer = msgs.join(deg, "node").select(
             "node",
             "dim",
             F.expr(
@@ -942,13 +870,10 @@ def propagate_embeddings(
                 "THEN 1 ELSE 0 END)"
             ).alias("e"),
         )
-        if materialize:
-            cur, cb = checkpoint_partitioned(
-                cur.repartition("node"),
-                width=round_width(feat_bytes, cur.sparkSession),
-                return_bytes=True,
-            )
-            feat_bytes = cb if cb is not None else feat_bytes
+        # layer 1 is sized from the edge side, as in bfs and walks
+        cur = checkpoint_partitioned(
+            layer, "node", size_from=cur if r > 0 else sym
+        )
         acc = (
             acc.join(cur, ["node", "dim"], "left")
             .select(

@@ -52,7 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.audit import checkpoint_partitioned, round_width
+from ..plans.audit import checkpoint_partitioned
 from .dedup import normalize_text, span_coverage, spread
 
 
@@ -86,29 +86,26 @@ def token_rank_table(
     text_col: str = "text",
     id_col: str = "doc_id",
     repartition: int | bool | None = None,
-    stats: dict | None = None,
 ) -> DataFrame:
     """(id, pos, r): rank of each token occurrence (equality <=> same
-    token), position 0-based within its (normalized) document.
-    ``stats`` (optional) records the materialized token-table bytes
-    as ``toks_bytes`` so callers can size downstream round layouts
-    (OPTIMIZATION_r13 — see plans.audit.round_width). The rank column
-    ``r`` is a min-occurrence struct(__ri, __rp) REPRESENTATIVE, not a
-    dense integer: downstream consumers may only compare it for
-    EQUALITY (the dict_encode dense-rank contract was retired in
-    OPTIMIZATION_r12; use dict_encode directly if you need dense
-    integer ids)."""
+    token), position 0-based within its (normalized) document —
+    round 0 of ``prefix_doubling_ranks``, materialized and keyed by
+    (id, pos). The rank column ``r`` is a min-occurrence
+    struct(__ri, __rp) REPRESENTATIVE, not a dense integer: downstream
+    consumers may only compare it for EQUALITY (the dict_encode
+    dense-rank contract was retired in OPTIMIZATION_r12; use
+    dict_encode directly if you need dense integer ids)."""
     words = F.split(normalize_text(F.col(text_col)), " ")
-    toks, nbytes = checkpoint_partitioned(
-        spread(df, repartition)
-        .select(F.col(id_col), F.posexplode(words).alias("pos", "__tok"))
-        .repartition("__tok"),
-        return_bytes=True,
+    toks = checkpoint_partitioned(
+        spread(df, repartition).select(
+            F.col(id_col), F.posexplode(words).alias("pos", "__tok")
+        ),
+        "__tok",
     )
-    if stats is not None:
-        stats["toks_bytes"] = nbytes
     vocab = _rep_rank(toks, "__tok", id_col, "r")
-    return toks.join(vocab, "__tok").select(id_col, "pos", "r")
+    return checkpoint_partitioned(
+        toks.join(vocab, "__tok").select(id_col, "pos", "r"), id_col, "pos"
+    )
 
 
 def _rank_at_offset(ranks: DataFrame, id_col: str, offset: int):
@@ -129,14 +126,14 @@ def prefix_doubling_ranks(
     rounds: int,
     id_col: str = "doc_id",
     prune_unique: bool = False,
-    materialize_input: bool = True,
     return_rounds: bool = False,
-    frame_bytes: int | None = None,
 ) -> DataFrame | list[DataFrame]:
     """Iterate rank doubling: after ``rounds`` rounds, ``r`` is the
     rank of the 2^rounds-token block starting at each position — rank
     equality <=> block equality (blocks running past the document end
-    rank by their truncated prefix). Input is round 0 (token ranks).
+    rank by their truncated prefix). Input is round 0, the token ranks
+    as ``token_rank_table`` returns them (materialized, keyed by
+    (id, pos)).
 
     ITERATIVE operator policy (same as pagerank/connected_components):
     each round materializes two checkpoints — the pair table keyed by
@@ -167,22 +164,12 @@ def prefix_doubling_ranks(
     running many passes should use a reliable checkpoint dir with
     periodic cleanup instead of localCheckpoint.
 
-    Round layouts are sized to the FRAME, not the core count
-    (OPTIMIZATION_r13, VERDICT r12 #1): each round's checkpoints are
-    ``round_width(bytes of the previous round's materialized ranks)``
-    partitions wide — capped at spark.sql.shuffle.partitions (the
-    100 TB behavior is unchanged), floored at 1 so the shrinking
-    survivor tables of pruned mode stop paying core-count-wide
-    scheduling per job. ``frame_bytes`` seeds the estimate when the
-    caller materialized the input itself."""
-    sess = ranks.sparkSession
-    if materialize_input:
-        ranks, frame_bytes = checkpoint_partitioned(
-            ranks.repartition(id_col, "pos"), return_bytes=True
-        )
+    Round layouts are sized to the FRAME, not the core count: both of
+    a round's checkpoints are sized from the previous round's
+    materialized ranks, so the shrinking survivor tables of pruned mode
+    stop paying core-count-wide scheduling per job."""
     round_tables: list[DataFrame] = []
     for k in range(rounds):
-        w = round_width(frame_bytes, sess)
         joined = _rank_at_offset(ranks, id_col, 1 << k)
         if prune_unique:
             joined = joined.where(F.col("__r2").isNotNull())
@@ -191,10 +178,11 @@ def prefix_doubling_ranks(
         # round's only other exchanges are the positional self-join
         # and the (id, pos) repartition for the next round
         paired = checkpoint_partitioned(
-            joined.withColumn("__key", F.struct("r", "__r2"))
-            .select(id_col, "pos", "__key")
-            .repartition("__key"),
-            width=w,
+            joined.withColumn("__key", F.struct("r", "__r2")).select(
+                id_col, "pos", "__key"
+            ),
+            "__key",
+            size_from=ranks,
         )
         # min_count=2 folds survivor pruning into the rank-vocabulary
         # groupBy (one pass); the inner join back then drops unique
@@ -203,12 +191,13 @@ def prefix_doubling_ranks(
             paired, "__key", id_col, "__nr",
             min_count=2 if prune_unique else 1,
         )
-        ranks, frame_bytes = checkpoint_partitioned(
+        ranks = checkpoint_partitioned(
             paired.join(vocab, "__key").select(
                 id_col, "pos", F.col("__nr").alias("r")
-            ).repartition(id_col, "pos"),
-            width=w,
-            return_bytes=True,
+            ),
+            id_col,
+            "pos",
+            size_from=ranks,
         )
         if return_rounds:
             round_tables.append(ranks)
@@ -238,21 +227,14 @@ def exact_substring_duplicates(
         base_rounds -= 1
     block = 1 << base_rounds
 
-    # one corpus scan: the round-0 rank table is checkpointed keyed by
-    # (id, pos); every doc's token count falls out of it (positions are
-    # dense, split() yields >= 1 token for any text), so no second
-    # scan/explode is needed for the per-doc base stats
-    r0, r0_bytes = checkpoint_partitioned(
-        token_rank_table(df, text_col, id_col, repartition=repartition)
-        .repartition(id_col, "pos"),
-        return_bytes=True,
-    )
+    # one corpus scan: every doc's token count falls out of the round-0
+    # rank table (positions are dense, split() yields >= 1 token for
+    # any text), so no second scan/explode is needed for the per-doc
+    # base stats
+    r0 = token_rank_table(df, text_col, id_col, repartition=repartition)
     base = r0.groupBy(id_col).agg((F.max("pos") + 1).alias("n_tokens"))
 
-    ranks = prefix_doubling_ranks(
-        r0, base_rounds, id_col, prune_unique=True,
-        materialize_input=False, frame_bytes=r0_bytes,
-    )
+    ranks = prefix_doubling_ranks(r0, base_rounds, id_col, prune_unique=True)
     # substring-of-length-min_len key: block ranks at pos and at
     # pos + min_len - block (overlapping windows cover exactly
     # [pos, pos + min_len)). No doc-length filter is needed in either
@@ -313,16 +295,10 @@ def dup_length_profile(
     if max_len < 2 or max_len & (max_len - 1):
         raise ValueError("max_len must be a power of two >= 2")
     rounds = max_len.bit_length() - 1
-    r0, r0_bytes = checkpoint_partitioned(
-        token_rank_table(df, text_col, id_col, repartition=repartition)
-        .repartition(id_col, "pos"),
-        return_bytes=True,
-    )
+    r0 = token_rank_table(df, text_col, id_col, repartition=repartition)
     out = r0.groupBy(id_col).agg((F.max("pos") + 1).alias("n_tokens"))
     tables = prefix_doubling_ranks(
-        r0, rounds, id_col,
-        prune_unique=True, materialize_input=False, return_rounds=True,
-        frame_bytes=r0_bytes,
+        r0, rounds, id_col, prune_unique=True, return_rounds=True
     )
     for k, t in enumerate(tables, start=1):
         col = f"dup_at_{1 << k}"

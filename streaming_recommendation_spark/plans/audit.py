@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import contextlib
 import io
-import os
 import re
 
 from pyspark.sql import DataFrame
@@ -66,90 +65,58 @@ def audit(df: DataFrame) -> dict:
     }
 
 
-# Target bytes per partition for ITERATIVE round-state layouts
-# (OPTIMIZATION_r13, VERDICT r12 #1). Rationale: a round frame's
-# checkpoint width used to inherit spark.sql.shuffle.partitions
-# (= $SPARK_GRAFT_CPUS locally), so EVERY per-round job scheduled a
-# core-count-wide stage over kilobyte frames — the 8-core bench beat
-# the 32-core one 2-4.5x on the iterative tier. Sizing the layout to
-# the FRAME (ceil(bytes/target), capped at shuffle.partitions) is
-# scale-adaptive: at 100 TB the cap binds and nothing changes; at
-# bench scale tiny round states collapse to a few tasks. The target
-# is deliberately small (8 MB of materialized row bytes ~ a few MB
-# on the wire) so real per-round work keeps parallelism; override
-# via SPARK_GRAFT_ROUND_TARGET_BYTES.
-ROUND_TARGET_BYTES = int(
-    os.environ.get("SPARK_GRAFT_ROUND_TARGET_BYTES", str(8 << 20))
-)
+# Target bytes per partition of an iterative operator's round layout.
+# A round frame's checkpoint width used to inherit
+# spark.sql.shuffle.partitions (the core count locally), so every
+# per-round job scheduled a core-count-wide stage over kilobyte frames
+# (the 8-core bench beat the 32-core one 2-4.5x on the iterative tier).
+# Sizing the layout to the frame (ceil(bytes / target), capped at
+# shuffle.partitions) is scale-adaptive: at 100 TB the cap binds and
+# nothing changes; at bench scale tiny round states collapse to a few
+# tasks. The target is small (8 MB of materialized row bytes, a few MB
+# on the wire) so real per-round work keeps its parallelism.
+ROUND_TARGET_BYTES = 8 << 20
 
 
-def _checkpoint_bytes(out) -> int | None:
-    """Bytes of ``out``'s own localCheckpoint RDD — driver-side
-    block-manager metadata, NO job. A checkpointed DataFrame's
-    analyzed plan is a ``LogicalRDD`` over exactly that RDD, so an
+def _checkpoint_bytes(frame) -> int | None:
+    """Bytes of the localCheckpoint RDD ``frame`` reads (the RDD of its
+    analyzed plan's one ``LogicalRDD`` leaf: the frame itself when it
+    is a checkpoint, or a coalesce of one), from driver-side
+    block-manager metadata with no job. Only that RDD is read, so an
     upstream persist the same action materialized is never credited.
-    Returns None when the RDD holds no cached bytes (e.g. an empty
-    frame — the block manager only lists RDDs with cached blocks)."""
-    rdd_id = out._jdf.queryExecution().analyzed().rdd().id()
-    jsc = out.sparkSession.sparkContext._jsc.sc()
+    An empty frame still lists a few bytes per partition; None when the
+    frame reads no checkpoint or the RDD has no cached blocks at all
+    (no partitions)."""
+    leaves = frame._jdf.queryExecution().analyzed().collectLeaves()
+    if leaves.size() != 1 or leaves.head().nodeName() != "LogicalRDD":
+        return None
+    rdd_id = leaves.head().rdd().id()
+    jsc = frame.sparkSession.sparkContext._jsc.sc()
     for info in jsc.getRDDStorageInfo():
         if info.id() == rdd_id:
             return int(info.memSize() + info.diskSize())
     return None
 
 
-def round_width(nbytes: int | None, sess, target_bytes: int | None = None):
-    """Partition count for the NEXT iterative-round layout, from the
-    measured materialized bytes of the frame the round derives from:
-    ceil(bytes / ROUND_TARGET_BYTES) clamped to
-    [1, spark.sql.shuffle.partitions]. The cap keeps 100 TB frames at
-    the session's full configured width (production sizes
-    shuffle.partitions to the data); the floor keeps tiny round
-    states off core-count-wide layouts. Returns None (caller keeps
-    the session default) when bytes are unknown."""
-    if nbytes is None or nbytes < 0:
+def _width(frame) -> int | None:
+    """Partition count of a layout sized from ``frame``'s materialized
+    bytes: ceil(bytes / ROUND_TARGET_BYTES) clamped to
+    [1, spark.sql.shuffle.partitions], so an empty round frame sizes
+    the next round to width 1. None (the session default) when the
+    bytes are unknown, or when ``frame`` is None."""
+    nbytes = None if frame is None else _checkpoint_bytes(frame)
+    if nbytes is None:
         return None
-    target = target_bytes or ROUND_TARGET_BYTES
-    cap = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(cap, (int(nbytes) + target - 1) // target))
+    cap = int(frame.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, -(-nbytes // ROUND_TARGET_BYTES)))
 
 
-def checkpoint_partitioned(df, width: int | None = None,
-                           return_bytes: bool = False):
-    """``localCheckpoint`` that KEEPS the DataFrame's hash
-    partitioning. Under AQE, ``Dataset.checkpoint`` records
-    ``UnknownPartitioning`` (the adaptive plan can still re-coalesce,
-    so Spark won't promise a layout) and every later join against the
-    checkpoint re-shuffles it. Iterative operators (PageRank,
-    connected components) checkpoint a STATIC side once and join it
-    every round — re-shuffling it per round is the exact cost the
-    checkpoint was meant to avoid. Materializing with AQE briefly off
-    makes the LogicalRDD carry ``hashpartitioning(key, n)``, so each
-    superstep reuses the layout (one message shuffle per round, the
-    Pregel shape). On a real cluster the equivalent durable form is a
-    table bucketed by the join key (sources/layout.py).
-
-    ``width`` (OPTIMIZATION_r13): sets spark.sql.shuffle.partitions
-    for the DURATION OF THIS MATERIALIZATION ONLY, so a bare
-    ``repartition("key")`` (and any exchange inside the checkpointed
-    subplan) lays the frame out ``width`` wide instead of the session
-    default. Iterative operators derive it from the previous round's
-    measured bytes via ``round_width`` — see ROUND_TARGET_BYTES.
-
-    ``return_bytes=True`` additionally returns the materialized size
-    in bytes (block-manager metadata, no job) as ``(df, nbytes)``;
-    nbytes is None when not visible (empty frame).
-
-    Caveat: both settings are session-global. During the (brief,
-    eager) materialization the session runs with AQE off and, when
-    ``width`` is given, with spark.sql.shuffle.partitions = ``width``
-    (often 1 for a small round), so a query PLANNED by a concurrent
-    thread/stream in that window would also skip AQE and lay out
-    every shuffle ``width`` wide. The engine's operators run checkpoints
-    sequentially on the driver thread; if you embed them under a
-    multi-threaded scheduler, serialize calls or use a separate
-    SparkSession (newSession()) per thread.
-    """
+def _checkpoint(df, width: int | None):
+    """Eager ``localCheckpoint`` with AQE off and, when ``width`` is
+    given, spark.sql.shuffle.partitions = ``width``; both session
+    settings are restored afterwards, also when the materialization
+    fails. The only place the package changes a session setting
+    mid-run."""
     sess = df.sparkSession
     old = sess.conf.get("spark.sql.adaptive.enabled")
     old_sp = sess.conf.get("spark.sql.shuffle.partitions")
@@ -157,43 +124,57 @@ def checkpoint_partitioned(df, width: int | None = None,
     if width is not None:
         sess.conf.set("spark.sql.shuffle.partitions", str(int(width)))
     try:
-        out = df.localCheckpoint()
+        return df.localCheckpoint()
     finally:
         sess.conf.set("spark.sql.adaptive.enabled", old)
         sess.conf.set("spark.sql.shuffle.partitions", old_sp)
-    if return_bytes:
-        return out, _checkpoint_bytes(out)
+
+
+def checkpoint_partitioned(df, *keys: str, size_from=None, static: bool = False):
+    """``localCheckpoint`` that KEEPS the DataFrame's hash partitioning,
+    laid out by ``keys`` (no keys: the frame's own layout). The one
+    materialization step of every iterative operator.
+
+    Under AQE, ``Dataset.checkpoint`` records ``UnknownPartitioning``
+    (the adaptive plan can still re-coalesce, so Spark won't promise a
+    layout) and every later join against the checkpoint re-shuffles
+    it. Iterative operators (PageRank, connected components) checkpoint
+    a STATIC side once and join it every round; re-shuffling it per
+    round is the exact cost the checkpoint was meant to avoid.
+    Materializing with AQE briefly off makes the LogicalRDD carry
+    ``hashpartitioning(key, n)``, so each superstep reuses the layout
+    (one message shuffle per round, the Pregel shape). On a real
+    cluster the equivalent durable form is a table bucketed by the
+    join key (sources/layout.py).
+
+    Width: ``size_from`` is an already-materialized frame, usually the
+    previous round's; the layout (and every exchange inside the
+    checkpointed plan) is ``_width(size_from)`` wide, see
+    ROUND_TARGET_BYTES. Without it the session default applies.
+
+    ``static=True`` marks a loop side joined every round: after the
+    first materialization, a SMALL frame is laid out again at its own
+    frame-sized width, re-shuffled by ``keys`` (or coalesced, with no
+    keys). Only when that width is at most a quarter of the session
+    default: a relayout that only halves the width pays a full extra
+    copy for marginal scheduling savings (measured on q102's 100 MB
+    edge side, 32 -> 12 partitions was a wash). At 100 TB the frame is
+    large and this never fires.
+
+    Caveat: both settings are session-global. During the brief, eager
+    materialization the session runs with AQE off and with
+    spark.sql.shuffle.partitions at the layout width (often 1 for a
+    small round), so a query PLANNED by a concurrent thread or stream
+    in that window would also skip AQE and lay out every shuffle that
+    wide. The engine's operators run checkpoints sequentially on the
+    driver thread; if you embed them under a multi-threaded scheduler,
+    serialize calls or use a separate SparkSession (newSession()) per
+    thread.
+    """
+    out = _checkpoint(df.repartition(*keys) if keys else df, _width(size_from))
+    w = _width(out) if static else None
+    if w is not None and 4 * w <= int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    ):
+        return _checkpoint(out.repartition(w, *keys), w) if keys else out.coalesce(w)
     return out
-
-
-def narrow_static_layout(df, nbytes: int | None, *keys: str):
-    """Re-layout an ALREADY-MATERIALIZED static loop side (edge
-    list, adjacency) to a frame-sized width — but only when the
-    measured frame is small enough that the relayout is provably
-    cheap AND the width drastically shrinks (<= a quarter of the
-    session default). Iterative operators call this right after the
-    static side's first checkpoint: at 100 TB the frame is large, the
-    condition never fires, and the cost is exactly one materialized
-    checkpoint as before; at small scale the (bounded, <=
-    shuffle.partitions/4 x ROUND_TARGET_BYTES) re-layout buys every
-    subsequent round a frame-sized stage width. The 4x bar is
-    deliberate: a re-layout that only halves the width pays a full
-    extra copy of the frame for marginal scheduling savings (measured
-    on q102's 100 MB edge side — 32 -> 12 partitions was a wash).
-    Returns the input unchanged when the condition does not fire."""
-    sess = df.sparkSession
-    w = round_width(nbytes, sess)
-    default = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    if w is None or 4 * w > default:
-        return df
-    return checkpoint_partitioned(df.repartition(w, *keys), width=w)
-
-
-def local_checkpoint_measured(df):
-    """Plain (AQE-on) ``localCheckpoint`` that also reports the
-    materialized bytes — ``(df, nbytes | None)``. Same block-manager
-    read as ``checkpoint_partitioned(return_bytes=True)``; used by
-    iterative operators to size the NEXT round's layout from the
-    frame they just materialized."""
-    out = df.localCheckpoint()
-    return out, _checkpoint_bytes(out)

@@ -113,7 +113,7 @@ def _pg(spark, edges, feats):
     f = spark.createDataFrame(feats, "node bigint, dim bigint, val bigint")
     return {
         (r.node, r.dim): r.emb
-        for r in propagate_embeddings(e, f, rounds=2, materialize=False).collect()
+        for r in propagate_embeddings(e, f, rounds=2).collect()
     }
 
 
