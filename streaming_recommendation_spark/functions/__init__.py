@@ -10,7 +10,7 @@ from .scalars import (
     pipe_split,
     zero_vector_default,
 )
-from .vectors import cosine_similarity, dot, l2_norm, mean_pool
+from .vectors import cosine_similarity, dot, l2_norm
 
 __all__ = [
     "det_hash_long",
@@ -28,5 +28,4 @@ __all__ = [
     "cosine_similarity",
     "dot",
     "l2_norm",
-    "mean_pool",
 ]

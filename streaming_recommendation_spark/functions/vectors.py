@@ -1,10 +1,12 @@
 """Vector functions over array<float|double> columns.
 
-Dense-embedding math (SURVEY §2.9 M1/M2, §2.4 A7) expressed with
-higher-order array functions — JVM-side, no Python round trip. These
-power the similarity-search operators and the recall stage of the
-cascade. Reference behavior: eval_online/main/lightgcn.py:40-45
-(matmul scoring), eval_online/main/inference.py:59-64 (mean-pool).
+Dense-embedding math (SURVEY §2.9 M1/M2) expressed with higher-order
+array functions — JVM-side, no Python round trip. These power the
+similarity-search operators and the recall stage of the cascade.
+Reference behavior: eval_online/main/lightgcn.py:40-45 (matmul
+scoring). The reference's mean-pool (eval_online/main/inference.py:59-64,
+SURVEY §2.4 A7) is q29's per-dimension avg and ``cascade_kernel``'s
+history mean-pool.
 """
 
 from __future__ import annotations
@@ -47,20 +49,3 @@ def cosine_from_norms(
     earlier. Measured 2.7x on 3M 64-dim pairs (local[32])."""
     denom = _c(norm_a) * _c(norm_b)
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
-
-
-def mean_pool(arr_col: Column | str) -> Column:
-    """A7: mean of an array-of-vectors column (per row) -> vector.
-
-    The grouped form (mean of vectors across rows) is a posexplode and
-    a per-dimension avg (q29), or, for the cascade's history vectors,
-    ``cascade.recommend.cascade_kernel``'s numpy mean-pool.
-    """
-    arrs = _c(arr_col)
-    n = F.size(arrs)
-    summed = F.aggregate(
-        arrs,
-        F.array_repeat(F.lit(0.0), F.size(F.element_at(arrs, 1))),
-        lambda acc, v: F.zip_with(acc, v, lambda x, y: x + y),
-    )
-    return F.transform(summed, lambda x: x / n)

@@ -1690,7 +1690,7 @@ def test_skewed_store_read_plan(spark, tmp_path):
     compiles to WindowGroupLimit, so a hot-term query's ~0.3|corpus|
     candidate rows collapse map-side instead of landing on one
     reducer. Latency spread is measured by
-    scripts/skewed_store_soak.py (BASELINE.md)."""
+    ``python scripts/soak.py skewed_store`` (BASELINE.md)."""
     from streaming_recommendation_spark.streaming.hybrid import (
         hybrid_query,
         vectors_ingest_batch,

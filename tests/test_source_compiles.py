@@ -1,4 +1,5 @@
-"""Every package module compiles with warnings as errors.
+"""Every package module and every script compiles with warnings as
+errors.
 
 Import-time warnings such as ``invalid escape sequence`` fire only when
 a module is compiled, and the bytecode cache hides them after the
@@ -14,17 +15,20 @@ import warnings
 import streaming_recommendation_spark
 
 PACKAGE = pathlib.Path(streaming_recommendation_spark.__file__).parent
+SCRIPTS = PACKAGE.parent / "scripts"
 
 
 def test_package_compiles_without_warnings():
     failures = []
-    for path in sorted(PACKAGE.rglob("*.py")):
+    sources = sorted(PACKAGE.rglob("*.py")) + sorted(SCRIPTS.glob("*.py"))
+    assert any(p.parent == SCRIPTS for p in sources), "scripts/ not found"
+    for path in sources:
         with warnings.catch_warnings():
             warnings.simplefilter("error")
             try:
                 compile(path.read_text(encoding="utf-8"), str(path), "exec")
             except (SyntaxError, Warning) as e:
-                failures.append(f"{path.relative_to(PACKAGE)}: {e}")
+                failures.append(f"{path.relative_to(PACKAGE.parent)}: {e}")
     assert not failures, failures
 
 

@@ -664,7 +664,7 @@ def test_mixed_generation_erasure_crash_window(spark, tmp_path):
 @pytest.mark.slow  # >=10 s soak/parity tier (VERDICT r12 #3)
 def test_prune_bound_over_long_run(spark, tmp_path):
     """Pinned retention bound (VERDICT r11 #3, the fast twin of
-    scripts/retention_soak.py): over a 24-batch run with in-stream
+    ``python scripts/soak.py retention``): over a 24-batch run with in-stream
     compaction every 4 batches, a rolling upsert and a mid-run
     tombstone — at EVERY batch the committed generation dirs stay
     <= 2, delta partitions stay <= compact_every + 1, and after every
