@@ -18,4 +18,10 @@ Layout:
     cascade/      the 3-stage recommendation cascade (one numpy kernel)
 """
 
+from . import _zipimport
+
 __version__ = "0.1.0"
+
+# Python workers import the package to unpickle its functions; from
+# then on their tasks start without re-reading pyspark.zip.
+_zipimport.install()

@@ -15,6 +15,9 @@ cascade_kernel).
 
 from __future__ import annotations
 
+import weakref
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -22,6 +25,27 @@ from ..cascade import CascadeConfig
 from ..cascade.recommend import cascade_kernel, item_side
 from .pipeline import parse_profile_stream, start_fold
 from .sink import foreach_batch_writer
+
+# cached items frame -> (broadcast item side, item_id Arrow type)
+_item_sides: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _prepared_items(items: DataFrame):
+    """``items``' item side, read through ``.value``, and its item_id
+    Arrow type. A cached frame's side is broadcast once per frame; an
+    uncached frame is re-read on every call and its side ships with
+    the task (a broadcast per call would leave a driver temp file per
+    call until the context stops)."""
+    if items.is_cached and items in _item_sides:
+        return _item_sides[items]
+    table = items.select("item_id", "item_vec").toArrow()
+    side = item_side(table.to_pandas())
+    item_arrow = table.schema.field("item_id").type
+    if not items.is_cached:
+        _item_sides.pop(items, None)
+        return SimpleNamespace(value=side), item_arrow
+    prepared = _item_sides[items] = items.sparkSession.sparkContext.broadcast(side), item_arrow
+    return prepared
 
 
 def score_batch(
@@ -50,10 +74,17 @@ def score_batch(
     Plan shape: one narrow pass, no exchange. Every profile row
     carries its whole history, so each partition of the batch scores
     its own rows (mapInArrow over ``cascade_kernel``) and the writer's
-    foreachPartition follows in the same stage. The item side is
-    collected on the driver once per call — one job over ``items``,
-    which should be cached — and ships with the task. So a
-    micro-batch is two Spark jobs: the item collect and the write.
+    foreachPartition follows in the same stage. The item side (sorted
+    ids, matrix, norms) of a cached ``items`` frame is collected on
+    the driver once per frame — the cache already fixes the snapshot —
+    and broadcast, so a reused Python worker unpickles it once, not
+    once per batch, and every later micro-batch is one Spark job: the
+    write. An uncached frame is re-read (one more job) on every call.
+
+    Refresh contract: a new item table is a new ``items`` frame
+    object. ``items.unpersist()`` drops the frame's prepared side at
+    the next call, which re-reads it, as every call does while the
+    frame stays uncached.
 
     Duplicate versions: rows with the same (user_id, timestamp) in one
     partition are one version whose history is their histories
@@ -67,9 +98,7 @@ def score_batch(
 
     cfg = config or CascadeConfig()
     item_type = items.schema["item_id"].dataType
-    table = items.select("item_id", "item_vec").toArrow()
-    side = item_side(table.to_pandas())
-    item_arrow = table.schema.field("item_id").type
+    side, item_arrow = _prepared_items(items)
 
     def score_partition(batches):
         import numpy as np
@@ -87,7 +116,7 @@ def score_batch(
             None,
             codes[pc.list_parent_indices(hist).to_numpy()],
             pc.list_flatten(hist).to_numpy(zero_copy_only=False),
-            side,
+            side.value,
             cfg,
         )
         # u is grouped by version, in rank order within a version

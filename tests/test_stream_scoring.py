@@ -8,6 +8,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from streaming_recommendation_spark.cascade import CascadeConfig
 from streaming_recommendation_spark.sources.testdata import load_table
 from streaming_recommendation_spark.streaming import JsonlDirSink
 from streaming_recommendation_spark.streaming.scoring import (
@@ -250,34 +251,145 @@ def test_score_batch_matches_jvm_reference(spark, items):
         assert not {"5", "6", "7"} & set(got["recommendation_result:400:1700000300"])
 
 
-def test_score_batch_job_count(spark, items, tmp_path):
+def _item_frame(spark, shift: float):
+    """A new cached item frame whose vectors are the embeddings shifted
+    by `shift` (a distinct shift is a distinct plan: its own cache
+    entry)."""
+    emb = load_table(spark, "embeddings", SF_DIR)
+    return emb.select(
+        F.col("vec_id").alias("item_id"),
+        F.transform("embedding", lambda x: x + shift).alias("item_vec"),
+    ).cache()
+
+
+def _jobs(sc, group, run) -> int:
+    """Spark jobs `run()` starts, counted through a job group."""
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_score_batch_job_count(spark, tmp_path):
     """One micro-batch of the streaming leg (score_batch +
-    foreach_batch_writer) over the cached item frame runs as two Spark
-    jobs: the driver-side collect of the item side and the write,
-    whose stage scores each partition in place — not one job per
-    cascade stage (the DataFrame plan took ~20) nor a cogroup plus a
-    per-version gather (4)."""
+    foreach_batch_writer) over a cached item frame: the first batch
+    runs at most two Spark jobs (the one-time item collect and the
+    write), every later batch exactly one — the write, whose stage
+    scores each partition in place (the DataFrame plan took ~20 jobs,
+    a cogroup plus a per-version gather 4)."""
     from streaming_recommendation_spark.streaming.pipeline import parse_profile_stream
     from streaming_recommendation_spark.streaming.sink import foreach_batch_writer
 
     msgs = tmp_path / "batch.json"
     msgs.write_text("\n".join(json.dumps(m) for m in profile_messages()) + "\n")
     batch = parse_profile_stream(spark.read.text(str(msgs)))
+    items = _item_frame(spark, 0.25)
     items.count()  # the cached item side is set-up, not part of a batch
     sink = JsonlDirSink(str(tmp_path / "kv"))
+    write = foreach_batch_writer(sink)
     sc = spark.sparkContext
-    group = "test_score_batch_job_count"
-    sc.setJobGroup(group, "one scoring micro-batch")
     try:
-        foreach_batch_writer(sink)(score_batch(batch, items), 0)
+        first = _jobs(sc, "score_batch_first", lambda: write(score_batch(batch, items), 0))
+        second = _jobs(sc, "score_batch_second", lambda: write(score_batch(batch, items), 1))
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 2, jobs
+        items.unpersist()
+    assert 0 < first <= 2, first
+    assert second == 1, second
     assert set(sink.read_all()) == {
         "recommendation_result:100:1700000100",
         "recommendation_result:200:1700000200",
     }
+
+
+def _contract_profiles(spark):
+    return spark.createDataFrame(
+        [
+            {"user_id": "300", "history_items": ["1", "2"], "timestamp": 1_700_000_100},
+            {"user_id": "400", "history_items": ["5", "abc", "6", "40"], "timestamp": 1_700_000_300},
+        ]
+    )
+
+
+def test_score_batch_scores_each_cached_frame_against_its_own_items(spark, items):
+    """A second, different cached item frame is scored against its own
+    vectors: no prepared side of another frame is reused for it."""
+    profiles = _contract_profiles(spark)
+    shifted = _item_frame(spark, 0.5)
+    try:
+        base = _records(score_batch(profiles, items))
+        got = {k: json.loads(v) for k, v in _records(score_batch(profiles, shifted))}
+        assert got == _jvm_reference(profiles, shifted, CascadeConfig())
+        assert got != {k: json.loads(v) for k, v in base}
+    finally:
+        shifted.unpersist()
+
+
+def test_score_batch_rereads_items_unless_cached(spark):
+    """score_batch collects the item side at call time (one job) for a
+    cached frame's first call, after its unpersist(), and on every call
+    over an uncached frame; a cached frame's later calls run none.
+    Every result equals the JVM reference."""
+    from streaming_recommendation_spark.streaming import scoring
+
+    profiles = _contract_profiles(spark)
+    sc = spark.sparkContext
+    cfg = CascadeConfig(k_final=5)
+
+    def call(frame, group):
+        out = []
+        jobs = _jobs(sc, group, lambda: out.append(score_batch(profiles, frame, cfg)))
+        got = {k: json.loads(v) for k, v in _records(out[0])}
+        assert got == _jvm_reference(profiles, frame, cfg)
+        return jobs
+
+    cached = _item_frame(spark, 0.0)
+    assert [call(cached, f"cached_{i}") for i in range(2)] == [1, 0]
+    assert cached in scoring._item_sides
+    cached.unpersist()
+    assert [call(cached, f"unpersisted_{i}") for i in range(2)] == [1, 1]
+    assert cached not in scoring._item_sides
+
+    plain = load_table(spark, "embeddings", SF_DIR).select(
+        F.col("vec_id").alias("item_id"), F.col("embedding").alias("item_vec")
+    )
+    assert [call(plain, f"uncached_{i}") for i in range(2)] == [1, 1]
+    assert plain not in scoring._item_sides
+
+
+def test_score_batch_memo_does_not_keep_items_alive(spark):
+    """The prepared item side is held weakly by its frame: once the
+    frame is gone, so is its entry."""
+    import gc
+    import weakref
+
+    from streaming_recommendation_spark.streaming import scoring
+
+    frame = _item_frame(spark, 0.75)
+    score_batch(_contract_profiles(spark), frame).collect()
+    assert frame in scoring._item_sides
+    entries, ref = len(scoring._item_sides), weakref.ref(frame)
+    frame.unpersist()  # the entry stays until the next call or the frame's death
+    del frame
+    gc.collect()
+    assert ref() is None
+    assert len(scoring._item_sides) < entries
+
+
+def test_score_batch_redelivery_is_idempotent(spark, items, tmp_path):
+    """A micro-batch delivered twice with the same batch_id (a replay
+    after a failure before the commit) leaves the same keys with
+    byte-identical values."""
+    from streaming_recommendation_spark.streaming.sink import foreach_batch_writer
+
+    batch = _contract_profiles(spark)
+    sink = JsonlDirSink(str(tmp_path / "kv"))
+    write = foreach_batch_writer(sink)
+    write(score_batch(batch, items), 7)
+    first = sink.read_all()
+    write(score_batch(batch, items), 7)
+    assert first and sink.read_all() == first
 
 
 def test_score_batch_plan_has_no_exchange(spark, items):
