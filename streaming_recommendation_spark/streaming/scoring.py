@@ -16,7 +16,6 @@ cascade_kernel).
 from __future__ import annotations
 
 import weakref
-from types import SimpleNamespace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,26 +25,44 @@ from ..cascade.recommend import cascade_kernel, item_side
 from .pipeline import parse_profile_stream, start_fold
 from .sink import foreach_batch_writer
 
-# cached items frame -> (broadcast item side, item_id Arrow type)
+# items frame -> (cache token, item side, item_id Arrow type)
 _item_sides: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
+def _cache_token(items: DataFrame) -> int | None:
+    """The RDD id of the loaded cache ``items`` reads, or None when it
+    reads none. Asked of the JVM cache manager (no Spark job), so an
+    uncache or re-cache by any path — ``unpersist()`` through any frame
+    of the same plan, ``catalog.clearCache()``/``uncacheTable``, a
+    write to or ``refreshByPath`` over the cached source — changes it."""
+    cached = (
+        items.sparkSession._jsparkSession.sharedState()
+        .cacheManager()
+        .lookupCachedData(items._jdf)
+    )
+    if not cached.isDefined():
+        return None
+    builder = cached.get().cachedRepresentation().cacheBuilder()
+    return builder.cachedColumnBuffers().id() if builder.isCachedColumnBuffersLoaded() else None
+
+
 def _prepared_items(items: DataFrame):
-    """``items``' item side, read through ``.value``, and its item_id
-    Arrow type. A cached frame's side is broadcast once per frame; an
-    uncached frame is re-read on every call and its side ships with
-    the task (a broadcast per call would leave a driver temp file per
-    call until the context stops)."""
-    if items.is_cached and items in _item_sides:
-        return _item_sides[items]
+    """``items``' item side and its item_id Arrow type: remembered per
+    frame while the frame reads the same loaded cache, re-read
+    otherwise."""
+    token = _cache_token(items)
+    memo = _item_sides.get(items)
+    if token is not None and memo is not None and memo[0] == token:
+        return memo[1:]
     table = items.select("item_id", "item_vec").toArrow()
     side = item_side(table.to_pandas())
     item_arrow = table.schema.field("item_id").type
-    if not items.is_cached:
+    token = _cache_token(items)  # the read above loaded a cached frame's cache
+    if token is None:
         _item_sides.pop(items, None)
-        return SimpleNamespace(value=side), item_arrow
-    prepared = _item_sides[items] = items.sparkSession.sparkContext.broadcast(side), item_arrow
-    return prepared
+    else:
+        _item_sides[items] = token, side, item_arrow
+    return side, item_arrow
 
 
 def score_batch(
@@ -76,15 +93,17 @@ def score_batch(
     its own rows (mapInArrow over ``cascade_kernel``) and the writer's
     foreachPartition follows in the same stage. The item side (sorted
     ids, matrix, norms) of a cached ``items`` frame is collected on
-    the driver once per frame — the cache already fixes the snapshot —
-    and broadcast, so a reused Python worker unpickles it once, not
-    once per batch, and every later micro-batch is one Spark job: the
-    write. An uncached frame is re-read (one more job) on every call.
+    the driver once per loaded cache — the cache already fixes the
+    snapshot — and remembered per frame, so every later micro-batch is
+    one Spark job: the write. The side ships with the task. An
+    uncached frame is re-read (one more job) on every call.
 
-    Refresh contract: a new item table is a new ``items`` frame
-    object. ``items.unpersist()`` drops the frame's prepared side at
-    the next call, which re-reads it, as every call does while the
-    frame stays uncached.
+    Refresh contract: the remembered side is used only while the frame
+    reads the same loaded cache, as the JVM cache manager reports it.
+    So a new frame object, an uncache by any path (``unpersist()``,
+    ``catalog.clearCache()``, ``uncacheTable``) and a re-cache (a write
+    to or ``refreshByPath`` over the cached source) each make the next
+    call re-read the items.
 
     Duplicate versions: rows with the same (user_id, timestamp) in one
     partition are one version whose history is their histories
@@ -116,7 +135,7 @@ def score_batch(
             None,
             codes[pc.list_parent_indices(hist).to_numpy()],
             pc.list_flatten(hist).to_numpy(zero_copy_only=False),
-            side.value,
+            side,
             cfg,
         )
         # u is grouped by version, in rank order within a version

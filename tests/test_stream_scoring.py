@@ -326,36 +326,70 @@ def test_score_batch_scores_each_cached_frame_against_its_own_items(spark, items
         shifted.unpersist()
 
 
-def test_score_batch_rereads_items_unless_cached(spark):
+def test_score_batch_rereads_items_unless_cached(spark, tmp_path):
     """score_batch collects the item side at call time (one job) for a
-    cached frame's first call, after its unpersist(), and on every call
-    over an uncached frame; a cached frame's later calls run none.
-    Every result equals the JVM reference."""
+    cached frame's first call, after any uncache — unpersist() through
+    the frame or through another frame of the same plan, which leaves
+    the first frame's is_cached flag set — after a write re-caches the
+    frame's source, and on every call over an uncached frame; a cached
+    frame's later calls run none. Every result equals the JVM
+    reference, so a re-cache is scored against the new vectors."""
     from streaming_recommendation_spark.streaming import scoring
 
-    profiles = _contract_profiles(spark)
+    # cached: a createDataFrame frame re-runs one Python task per input
+    # partition whenever it is read
+    profiles = _contract_profiles(spark).coalesce(1).cache()
     sc = spark.sparkContext
     cfg = CascadeConfig(k_final=5)
+    refs = {}  # item data -> JVM reference records
 
-    def call(frame, group):
-        out = []
-        jobs = _jobs(sc, group, lambda: out.append(score_batch(profiles, frame, cfg)))
-        got = {k: json.loads(v) for k, v in _records(out[0])}
-        assert got == _jvm_reference(profiles, frame, cfg)
-        return jobs
+    def twice(frame, group, data):
+        """Job counts of two calls over `frame`, whose item data is
+        `data`, and their records."""
+        counts, results = [], []
+        for i in range(2):
+            out = []
+            counts.append(
+                _jobs(sc, f"{group}_{i}", lambda: out.append(score_batch(profiles, frame, cfg)))
+            )
+            results.append({k: json.loads(v) for k, v in _records(out[0])})
+        if data not in refs:
+            refs[data] = _jvm_reference(profiles, frame, cfg)
+        assert results[0] == results[1] == refs[data]
+        return counts, results[0]
 
     cached = _item_frame(spark, 0.0)
-    assert [call(cached, f"cached_{i}") for i in range(2)] == [1, 0]
+    assert twice(cached, "cached", 0.0)[0] == [1, 0]
     assert cached in scoring._item_sides
     cached.unpersist()
-    assert [call(cached, f"unpersisted_{i}") for i in range(2)] == [1, 1]
+    assert twice(cached, "unpersisted", 0.0)[0] == [1, 1]
     assert cached not in scoring._item_sides
 
-    plain = load_table(spark, "embeddings", SF_DIR).select(
-        F.col("vec_id").alias("item_id"), F.col("embedding").alias("item_vec")
-    )
-    assert [call(plain, f"uncached_{i}") for i in range(2)] == [1, 1]
+    cached.cache()
+    assert twice(cached, "recached", 0.0)[0] == [1, 0]
+    twin = _item_frame(spark, 0.0)  # same plan, same cache entry
+    twin.unpersist()
+    assert cached.is_cached
+    assert twice(cached, "twin_unpersisted", 0.0)[0] == [1, 1]
+    assert cached not in scoring._item_sides
+
+    path = str(tmp_path / "items.parquet")
+    _item_frame(spark, 0.25).unpersist().write.parquet(path)
+    on_disk = spark.read.parquet(path).cache()
+    try:
+        counts, before = twice(on_disk, "on_disk", 0.25)
+        assert counts == [1, 0]
+        _item_frame(spark, 0.5).unpersist().write.mode("overwrite").parquet(path)
+        counts, after = twice(on_disk, "rewritten", 0.5)
+        assert counts == [1, 0]
+        assert after != before
+    finally:
+        on_disk.unpersist()
+
+    plain = _item_frame(spark, 1.0).unpersist()  # a plan no cache entry holds
+    assert twice(plain, "uncached", 1.0)[0] == [1, 1]
     assert plain not in scoring._item_sides
+    profiles.unpersist()
 
 
 def test_score_batch_memo_does_not_keep_items_alive(spark):
