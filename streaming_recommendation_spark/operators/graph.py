@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.audit import checkpoint_partitioned
+from ..plans.audit import checkpoint_partitioned, release
 
 RANK_SCALE = 1 << 20  # rank unit = 2^-20 of total mass
 
@@ -40,20 +40,22 @@ def pagerank_quantized(
     bit-identically on any engine. Returns (node, rank) after
     ``rounds`` supersteps from the uniform start scale div N.
 
-    Scale shape: each round is ONE join of the rank vector against
-    the edge list on the source key plus ONE groupBy(dst) message
-    aggregation — both shuffles keyed by node id, the Pregel
-    superstep. The degree table comes from one edge aggregation and
-    co-partitions with the join. With ``rounds`` fixed and small the
-    lazy plan nests ``rounds`` joins; at production depth, checkpoint
-    each round like connected_components does (lineage truncation),
-    and pre-partition edges by src so every superstep reuses the
-    same partitioning without re-shuffling the (static) edge side.
-    This operator does exactly that: it localCheckpoints the
-    symmetrized edges once and each round's rank vector (ITERATIVE
-    operator, same policy as connected_components — without it round
-    k replays rounds 1..k-1 AND the upstream edge join, ~2x wall at 3
-    rounds, quadratic deeper). On a real cluster prefer a reliable
+    Scale shape: one Spark job per superstep, whose only shuffle is
+    the groupBy(dst) message aggregation (the Pregel superstep). The
+    symmetrized edges are checkpointed once, hash-partitioned by the
+    source key (the static side), and the degree table is one
+    aggregation over that layout. The start vector (round 0) and
+    every round's rank vector go through ``checkpoint_partitioned``
+    sized from the edge side: hash-partitioned by node at the edge
+    side's partition count, with AQE off. So the rank join against
+    the edges on ``u = node`` and the join of the messages back onto
+    the rank vector need no exchange, and round k never replays
+    rounds 1..k-1 or the upstream edge join (lineage truncation, as
+    in connected_components). Round 0 is materialized too, so the
+    node count behind the start mass runs once. Each superseded
+    round is released once the next one is materialized, and the
+    edge side before returning: the result reads only the last
+    round's checkpoint. On a real cluster prefer a reliable
     checkpoint dir.
 
     Quantization error: each div truncates < 1 rank unit = 2^-20 of
@@ -82,7 +84,6 @@ def pagerank_quantized(
     nodes = deg.select(F.col("u").alias("node"), "deg")
     if seeds is None:
         nodes = nodes.withColumn("__seed", F.lit(1).cast("bigint"))
-        n_frame = nodes.select(F.count(F.lit(1)).alias("__n"))
     else:
         sd = seeds.select("node").distinct().withColumn(
             "__s", F.lit(1).cast("bigint")
@@ -94,17 +95,26 @@ def pagerank_quantized(
             .withColumn("__seed", F.coalesce(F.col("__s"), F.lit(0)))
             .drop("__s")
         )
-        n_frame = nodes.where(F.col("__seed") == 1).select(
-            F.count(F.lit(1)).alias("__n")
-        )
+    # N = the seed count (__seed is 0 or 1). Summed over the same
+    # ``nodes`` plan as the ranks' side, not counted under a filter:
+    # the seed broadcast is then one exchange, reused by both sides.
+    n_frame = nodes.select(
+        F.coalesce(F.sum("__seed"), F.lit(0).cast("bigint")).alias("__n")
+    )
     # start mass scale div N on the seed set (1-row broadcast, no
-    # driver action); uniform PageRank is the seeds=all special case
-    ranks = nodes.crossJoin(F.broadcast(n_frame)).select(
+    # driver action); uniform PageRank is the seeds=all special case.
+    # Round 0 is materialized like every round, so the node count
+    # behind it runs once, not again inside round 1's plan.
+    ranks = checkpoint_partitioned(
+        nodes.crossJoin(F.broadcast(n_frame)).select(
+            "node",
+            "deg",
+            "__seed",
+            F.expr(f"__seed * (CAST({scale} AS BIGINT) div __n)").alias("rank"),
+            F.col("__n"),
+        ),
         "node",
-        "deg",
-        "__seed",
-        F.expr(f"__seed * (CAST({scale} AS BIGINT) div __n)").alias("rank"),
-        F.col("__n"),
+        size_from=sym,
     )
     for _ in range(rounds):
         contribs = (
@@ -118,7 +128,7 @@ def pagerank_quantized(
             .groupBy(F.col("v").alias("node"))
             .agg(F.sum("__c").alias("__sum"))
         )
-        ranks = (
+        nxt = checkpoint_partitioned(
             ranks.select("node", "deg", "__seed", "__n")
             .join(contribs, "node", "left")
             .select(
@@ -136,9 +146,13 @@ def pagerank_quantized(
                         f" div 100"
                     )
                 ).alias("rank"),
-            )
+            ),
+            "node",
+            size_from=sym,
         )
-        ranks = ranks.localCheckpoint()
+        release(ranks)
+        ranks = nxt
+    release(sym)
     return ranks.select("node", "rank")
 
 

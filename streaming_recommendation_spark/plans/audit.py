@@ -78,37 +78,69 @@ def audit(df: DataFrame) -> dict:
 ROUND_TARGET_BYTES = 8 << 20
 
 
-def _checkpoint_bytes(frame) -> int | None:
-    """Bytes of the localCheckpoint RDD ``frame`` reads (the RDD of its
-    analyzed plan's one ``LogicalRDD`` leaf: the frame itself when it
-    is a checkpoint, or a coalesce of one), from driver-side
-    block-manager metadata with no job. Only that RDD is read, so an
-    upstream persist the same action materialized is never credited.
-    An empty frame still lists a few bytes per partition; None when the
-    frame reads no checkpoint or the RDD has no cached blocks at all
-    (no partitions)."""
+def _checkpoint_rdd(frame):
+    """The JVM RDD of the localCheckpoint ``frame`` reads: the RDD of
+    its analyzed plan's one ``LogicalRDD`` leaf (the frame itself when
+    it is a checkpoint, or a coalesce of one). None when the frame
+    reads anything else. No job."""
     leaves = frame._jdf.queryExecution().analyzed().collectLeaves()
     if leaves.size() != 1 or leaves.head().nodeName() != "LogicalRDD":
         return None
-    rdd_id = leaves.head().rdd().id()
+    return leaves.head().rdd()
+
+
+def _checkpoint_bytes(frame) -> int | None:
+    """Bytes of the localCheckpoint RDD ``frame`` reads, from
+    driver-side block-manager metadata with no job. Only that RDD is
+    read, so an upstream persist the same action materialized is never
+    credited. An empty frame still lists a few bytes per partition;
+    None when the frame reads no checkpoint or the RDD has no cached
+    blocks at all (no partitions)."""
+    rdd = _checkpoint_rdd(frame)
+    if rdd is None:
+        return None
     jsc = frame.sparkSession.sparkContext._jsc.sc()
     for info in jsc.getRDDStorageInfo():
-        if info.id() == rdd_id:
+        if info.id() == rdd.id():
             return int(info.memSize() + info.diskSize())
     return None
 
 
+# RDD name that marks the checkpoint of a keyed static side (shown in
+# the storage listing too); a round sized from such a side takes its
+# partition count
+STATIC_SIDE = "static round side"
+
+
 def _width(frame) -> int | None:
-    """Partition count of a layout sized from ``frame``'s materialized
-    bytes: ceil(bytes / ROUND_TARGET_BYTES) clamped to
+    """Partition count of a layout sized from ``frame``.
+
+    A keyed static side (``checkpoint_partitioned(..., static=True)``)
+    gives its own partition count, read off its checkpoint RDD with no
+    job: a round laid out that wide by the key it joins the side on
+    meets the side's layout, so the join needs no exchange. Any other
+    checkpoint gives ceil(bytes / ROUND_TARGET_BYTES) clamped to
     [1, spark.sql.shuffle.partitions], so an empty round frame sizes
     the next round to width 1. None (the session default) when the
     bytes are unknown, or when ``frame`` is None."""
+    rdd = None if frame is None else _checkpoint_rdd(frame)
+    if rdd is not None and rdd.name() == STATIC_SIDE:
+        return rdd.getNumPartitions() or None
     nbytes = None if frame is None else _checkpoint_bytes(frame)
     if nbytes is None:
         return None
     cap = int(frame.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return max(1, min(cap, -(-nbytes // ROUND_TARGET_BYTES)))
+
+
+def release(frame) -> None:
+    """Drop the cached blocks of the localCheckpoint ``frame`` reads
+    (see ``_checkpoint_rdd``); no-op for a frame that reads none. Call
+    it on a round once nothing still to be computed reads it: every
+    frame over that checkpoint fails when it next runs."""
+    rdd = _checkpoint_rdd(frame)
+    if rdd is not None:
+        rdd.unpersist(False)
 
 
 def _checkpoint(df, width: int | None):
@@ -147,19 +179,32 @@ def checkpoint_partitioned(df, *keys: str, size_from=None, static: bool = False)
     cluster the equivalent durable form is a table bucketed by the
     join key (sources/layout.py).
 
-    Width: ``size_from`` is an already-materialized frame, usually the
-    previous round's; the layout (and every exchange inside the
-    checkpointed plan) is ``_width(size_from)`` wide, see
-    ROUND_TARGET_BYTES. Without it the session default applies.
+    Width: ``size_from`` is an already-materialized frame; the layout
+    (and every exchange inside the checkpointed plan) is
+    ``_width(size_from)`` wide. Sized from the previous round, it
+    follows that round's bytes (see ROUND_TARGET_BYTES). Sized from a
+    keyed static side, it is that side's partition count, read off the
+    side's checkpoint with no job: a round that every superstep joins
+    against the side (PageRank's rank vector, joined to the edges on
+    ``u = node``) then meets the side's layout, and the superstep's
+    only shuffle is its message aggregation, which runs at the same
+    width. Without ``size_from`` the session default applies.
 
     ``static=True`` marks a loop side joined every round: after the
     first materialization, a SMALL frame is laid out again at its own
     frame-sized width, re-shuffled by ``keys`` (or coalesced, with no
-    keys). Only when that width is at most a quarter of the session
-    default: a relayout that only halves the width pays a full extra
-    copy for marginal scheduling savings (measured on q102's 100 MB
-    edge side, 32 -> 12 partitions was a wash). At 100 TB the frame is
-    large and this never fires.
+    keys), and the first materialization is released. A keyed side
+    takes at least 2 partitions: a one-partition layout is recorded as
+    SinglePartition, and the planner re-shuffles both sides of a keyed
+    join against it (measured: ``Exchange hashpartitioning(u, 1)`` on
+    the edge side and the rank vector in every PageRank round at
+    width 1; at width 2 the message shuffle is the only one). Only
+    when that width is at most a quarter of the session default: a
+    relayout that only halves the width pays a full extra copy for
+    marginal scheduling savings (measured on q102's 100 MB edge side,
+    32 -> 12 partitions was a wash). At 100 TB the frame is large and
+    this never fires. A keyed static side's checkpoint RDD is named
+    STATIC_SIDE, which is how ``size_from`` recognizes it.
 
     Caveat: both settings are session-global. During the brief, eager
     materialization the session runs with AQE off and with
@@ -172,9 +217,19 @@ def checkpoint_partitioned(df, *keys: str, size_from=None, static: bool = False)
     thread.
     """
     out = _checkpoint(df.repartition(*keys) if keys else df, _width(size_from))
-    w = _width(out) if static else None
+    if not static:
+        return out
+    w = _width(out)
+    if w is not None and keys:
+        w = max(2, w)
     if w is not None and 4 * w <= int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     ):
-        return _checkpoint(out.repartition(w, *keys), w) if keys else out.coalesce(w)
+        if not keys:
+            return out.coalesce(w)
+        narrow = _checkpoint(out.repartition(w, *keys), w)
+        release(out)
+        out = narrow
+    if keys:
+        _checkpoint_rdd(out).setName(STATIC_SIDE)
     return out

@@ -24,3 +24,13 @@ def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
     return con
+
+
+def count_jobs(sc, group, run) -> int:
+    """Spark jobs `run()` starts, counted through a job group."""
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))

@@ -24,7 +24,10 @@ audit_mod = importlib.import_module(
 )
 from streaming_recommendation_spark.plans.audit import (  # noqa: E402
     checkpoint_partitioned,
+    release,
 )
+
+from .conftest import SF_DIR, count_jobs  # noqa: E402
 
 
 def _width_from(spark, size_from):
@@ -111,9 +114,11 @@ def test_narrow_static_layout_fires_only_when_small(spark, monkeypatch):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     df = spark.range(2000).selectExpr("id", "id % 13 as k")
-    # tiny frame: one more materialization, laid out frame-sized
+    # tiny frame: one more materialization, laid out frame-sized but
+    # at least 2 wide (a one-partition layout is SinglePartition, which
+    # a keyed join re-shuffles)
     narrowed, jobs = static(df, "static-small")
-    assert narrowed.rdd.getNumPartitions() == 1
+    assert narrowed.rdd.getNumPartitions() == 2
     assert jobs == 2
     assert sorted(narrowed.collect()) == sorted(df.collect())
     # unknown bytes (no partitions): the layout stays as it was
@@ -260,8 +265,8 @@ def _exact_substring(spark):
 def test_round_layout_invariant(spark, monkeypatch, run):
     # an operator's OUTPUT is identical whether its round layouts are
     # wide (target=1 byte -> width = session cap, no static relayout)
-    # or fully collapsed (target=1 GiB -> width 1, static sides
-    # relaid out): layout is pure placement
+    # or fully collapsed (target=1 GiB -> width 1, keyed static sides
+    # relaid out at width 2): layout is pure placement
     def once(target):
         monkeypatch.setattr(audit_mod, "ROUND_TARGET_BYTES", target)
         out = run(spark)
@@ -304,3 +309,61 @@ def test_session_conf_set_only_in_checkpoint_window():
         ("plans/audit.py", "_checkpoint"),
         ("sources/testdata.py", "load_table"),
     }
+
+
+def test_bare_local_checkpoints_only_shrink():
+    # every round should materialize through checkpoint_partitioned;
+    # the bare .localCheckpoint() calls left under operators/ may only
+    # go down from here
+    pkg = pathlib.Path(audit_mod.__file__).resolve().parents[1]
+    n = sum(
+        path.read_text().count(".localCheckpoint()")
+        for path in sorted((pkg / "operators").rglob("*.py"))
+    )
+    assert n <= 11, n
+
+
+# ---------------------------------------------------------------------------
+# q148 (personalized PageRank): jobs per run, and released rounds
+# ---------------------------------------------------------------------------
+
+
+def _q148(spark):
+    from streaming_recommendation_spark.queries import registry
+
+    (q,) = [q for name, q in registry().items() if name.startswith("q148_")]
+    return q.fn(spark, SF_DIR)
+
+
+def test_q148_job_count(spark):
+    # one AQE-off job per superstep: the edge side (its orders
+    # broadcast, itself, its narrow relayout), the seed and seed-count
+    # broadcasts, round 0, three rounds and the collect; the table
+    # schemas are remembered from the first run
+    first = _q148(spark).collect()
+    rows = []
+    run = lambda: rows.extend(_q148(spark).collect())
+    jobs = count_jobs(spark.sparkContext, "q148-jobs", run)
+    assert sorted(rows) == sorted(first)
+    assert jobs <= 10, jobs
+
+
+def test_pagerank_releases_its_rounds(spark):
+    # every run leaves no cached checkpoint behind once its result is
+    # released, and the result survives the release of its inputs
+    sc = spark.sparkContext._jsc.sc()
+    cached = lambda: {i.id(): i.memSize() + i.diskSize() for i in sc.getRDDStorageInfo()}
+    before = set(cached())
+    results = []
+    for _ in range(3):
+        out = _q148(spark)
+        rows = sorted(out.collect())
+        assert sorted(out.collect()) == rows
+        results.append(rows)
+        left = {k: v for k, v in cached().items() if k not in before}
+        # only the result's own checkpoint is still cached
+        assert len(left) == 1, left
+        release(out)
+        assert not set(cached()) - before
+    assert results[0] == results[1] == results[2]
+    assert results[0]

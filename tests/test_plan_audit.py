@@ -3,6 +3,8 @@ headline queries scale are asserted, not assumed."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from streaming_recommendation_spark.plans import audit
@@ -499,11 +501,37 @@ def test_q101_phash_map_side_decode(run):
     )
 
 
+def _exchange_args(plan):
+    """The Arguments line of every Exchange in a formatted plan."""
+    return re.findall(r"\(\d+\) Exchange\n(?:.*\n)*?Arguments: (.*)", plan)
+
+
+def _exchanges_on_edge_side(plan):
+    """Exchanges between a scan of the static edge side (its checkpoint
+    RDD is named STATIC_SIDE, which the formatted plan prints) and the
+    join that reads it."""
+    from streaming_recommendation_spark.plans.audit import STATIC_SIDE
+
+    tree = plan.split("\n\n")[0].splitlines()[1:]
+    depth = lambda line: len(line) - len(line.lstrip(" :+-"))
+    found = 0
+    for i, line in enumerate(tree):
+        if f"Scan ExistingRDD {STATIC_SIDE}" not in line:
+            continue
+        d = depth(line)
+        for up in reversed(tree[:i]):
+            if depth(up) < d:
+                d = depth(up)
+                if "Join" in up:
+                    break
+                found += "Exchange" in up
+    return found
+
+
 def test_q102_pagerank_superstep_shape(spark, monkeypatch):
-    # audit each superstep of the MATERIALIZED operator as it is
-    # checkpointed (the returned frame only scans the last round):
-    # node-keyed equi-joins + message aggregations, and no
-    # single-partition funnel for the rank vector
+    # audit each checkpoint of the MATERIALIZED operator as it is
+    # taken (the returned frame only scans the last round): node-keyed
+    # equi-joins + message aggregations, one AQE-off plan per round
     import importlib
 
     from pyspark.sql import functions as F
@@ -523,13 +551,9 @@ def test_q102_pagerank_superstep_shape(spark, monkeypatch):
         )
         .distinct()
     )
-    # at the tiny fixture the static edge side would collapse to one
-    # partition (which the plan prints as SinglePartition); pin the
-    # round target tiny so the audit sees production-width layouts
     audit_mod = importlib.import_module(
         "streaming_recommendation_spark.plans.audit"
     )
-    monkeypatch.setattr(audit_mod, "ROUND_TARGET_BYTES", 1)
     audits = []
     frame_cls = type(edges)  # the session's concrete DataFrame class
     checkpoint = frame_cls.localCheckpoint
@@ -539,20 +563,31 @@ def test_q102_pagerank_superstep_shape(spark, monkeypatch):
         return checkpoint(df, *args, **kwargs)
 
     monkeypatch.setattr(frame_cls, "localCheckpoint", audited)
-    pagerank_quantized(edges, rounds=3).collect()
-    assert len(audits) == 4  # the edge side, then one per round
-    supersteps = audits[-3:]
-    for a in supersteps:
-        assert a["n_sortmerge_joins"] + a["n_shuffled_hash_joins"] + a[
-            "n_broadcast_joins"
-        ] >= 2, a["plan"]
-        assert (
-            "hashpartitioning(node" in a["plan"]
-            or "hashpartitioning(v" in a["plan"]
-        ), a["plan"]
-    # round 1 also evaluates the 1-row node count behind the start mass
-    for a in supersteps[1:]:
-        assert "SinglePartition" not in a["plan"], a["plan"]
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # at the tiny fixture the default target relays the static edge
+    # side out at its floor width of 2; a target of 1 byte keeps it at
+    # the session width. Either way every round takes the side's width.
+    for target, width in ((audit_mod.ROUND_TARGET_BYTES, 2), (1, cap)):
+        monkeypatch.setattr(audit_mod, "ROUND_TARGET_BYTES", target)
+        audits.clear()
+        pagerank_quantized(edges, rounds=3).collect()
+        # the edge side (and its narrow relayout), round 0, then one
+        # per round
+        assert len(audits) == (6 if width < cap else 5)
+        for a in audits[-3:]:
+            plan = a["plan"]
+            assert a["n_sortmerge_joins"] + a["n_shuffled_hash_joins"] + a[
+                "n_broadcast_joins"
+            ] >= 2, plan
+            # the start-mass count ran once, in round 0
+            assert a["bnl_joins"] == 0, plan
+            # the superstep's only shuffle is the message groupBy(v):
+            # the edge side and the rank vector share one layout (the
+            # edge side used to be re-shuffled to the session width)
+            args = _exchange_args(plan)
+            assert len(args) == a["n_exchanges"] == 1, plan
+            assert re.match(rf"hashpartitioning\(v#\d+L, {width}\),", args[0]), plan
+            assert _exchanges_on_edge_side(plan) == 0, plan
 
 
 def test_checkpoint_partitioned_superstep_reuses_edge_layout(spark):

@@ -17,7 +17,7 @@ from streaming_recommendation_spark.streaming.scoring import (
 )
 
 from .cascade_reference import reference_recommend
-from .conftest import SF_DIR
+from .conftest import SF_DIR, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -262,16 +262,6 @@ def _item_frame(spark, shift: float):
     ).cache()
 
 
-def _jobs(sc, group, run) -> int:
-    """Spark jobs `run()` starts, counted through a job group."""
-    sc.setJobGroup(group, group)
-    try:
-        run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_score_batch_job_count(spark, tmp_path):
     """One micro-batch of the streaming leg (score_batch +
     foreach_batch_writer) over a cached item frame: the first batch
@@ -291,8 +281,8 @@ def test_score_batch_job_count(spark, tmp_path):
     write = foreach_batch_writer(sink)
     sc = spark.sparkContext
     try:
-        first = _jobs(sc, "score_batch_first", lambda: write(score_batch(batch, items), 0))
-        second = _jobs(sc, "score_batch_second", lambda: write(score_batch(batch, items), 1))
+        first = count_jobs(sc, "score_batch_first", lambda: write(score_batch(batch, items), 0))
+        second = count_jobs(sc, "score_batch_second", lambda: write(score_batch(batch, items), 1))
     finally:
         items.unpersist()
     assert 0 < first <= 2, first
@@ -350,7 +340,7 @@ def test_score_batch_rereads_items_unless_cached(spark, tmp_path):
         for i in range(2):
             out = []
             counts.append(
-                _jobs(sc, f"{group}_{i}", lambda: out.append(score_batch(profiles, frame, cfg)))
+                count_jobs(sc, f"{group}_{i}", lambda: out.append(score_batch(profiles, frame, cfg)))
             )
             results.append({k: json.loads(v) for k, v in _records(out[0])})
         if data not in refs:
